@@ -51,7 +51,6 @@ def _add_common(p: argparse.ArgumentParser, streaming_sink: bool = True) -> None
     snk.add_argument("--checkpoint-path")
     snk.add_argument("--num-parquet-files", type=int, default=60)
     p.add_argument("--explain", action="store_true", help="print plan, do not run")
-    p.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "4"))
     p.add_argument(
         "--raise-on-error",
         action="store_true",
@@ -95,7 +94,7 @@ def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
         for f in frames[1:]:
             out = out.unionByName(f)
         return out, False
-    return spark.read.text(paths).withColumnRenamed("value", "value"), False
+    return spark.read.text(paths), False
 
 
 def _write_text(df: DataFrame, col: str, path: str) -> None:

@@ -41,13 +41,10 @@ def _int_when(cond: Column) -> Column:
     return F.when(cond, F.lit(1)).cast("int")
 
 
-def validity_flags() -> tuple[Column, Column]:
-    """``(allowed, rejected)`` over parsed-ping rows.
-
-    ``allowed`` is the P4 allow-list (intentional filtering —
-    ErrorAggregatorBase.scala:89-129); ``rejected`` re-expresses the
-    reference's throw-paths in parsePing/parse as a boolean (the rows
-    raiseOnError would have crashed on)."""
+def _validity() -> tuple[Column, Column, Column, Column, Column]:
+    """``(allowed, rejected, build_id, main_crash, content_crash)``: the
+    P4 flags plus the columns they are built from that ``prepare()``
+    also projects, so each expression is built once."""
     ping = F.col("ping")
     meta = ping["meta"]
     payload = ping["payload"]
@@ -61,8 +58,11 @@ def validity_flags() -> tuple[Column, Column]:
         & meta["appName"].isin(*ALLOWED_APP_NAMES)
         & ~F.coalesce(meta["normalizedChannel"], F.lit("")).isin(*DISALLOWED_CHANNELS)
     )
+    # per-doctype raw buildId (main/crash: environment.build via meta;
+    # core: appBuildId — CorePing.scala:56)
     raw_build_id = F.when(is_core, meta["appBuildId"]).otherwise(env["build"]["buildId"])
     build_id = P.normalized_build_id(raw_build_id, meta["submissionDate"])
+    # crash predicates (P5)
     main_crash = P.is_main_crash(payload)
     content_crash = P.is_content_crash(payload)
     rejected = (
@@ -71,7 +71,17 @@ def validity_flags() -> tuple[Column, Column]:
         | (is_core & ~payload["os"].isin(*CORE_ALLOWED_OSES))  # core non-Android
         | build_id.isNull()  # empty normalized buildId (all doctypes)
     )
-    return allowed, rejected
+    return allowed, rejected, build_id, main_crash, content_crash
+
+
+def validity_flags() -> tuple[Column, Column]:
+    """``(allowed, rejected)`` over parsed-ping rows.
+
+    ``allowed`` is the P4 allow-list (intentional filtering —
+    ErrorAggregatorBase.scala:89-129); ``rejected`` re-expresses the
+    reference's throw-paths in parsePing/parse as a boolean (the rows
+    raiseOnError would have crashed on)."""
+    return _validity()[:2]
 
 
 def parse_failure() -> Column:
@@ -106,17 +116,9 @@ def prepare(parsed: DataFrame) -> DataFrame:
     is_crash = doc_type == "crash"
     is_core = doc_type == "core"
 
-    # --- P4 allow-lists + reject rules (shared with parse_failure) ---
-    allowed, rejected = validity_flags()
-
-    # --- per-doctype raw buildId (main/crash: environment.build via
-    # meta; core: appBuildId — CorePing.scala:56) ---
-    raw_build_id = F.when(is_core, meta["appBuildId"]).otherwise(env["build"]["buildId"])
-    build_id = P.normalized_build_id(raw_build_id, meta["submissionDate"])
-
-    # --- crash predicates (P5) ---
-    main_crash = P.is_main_crash(payload)
-    content_crash = P.is_content_crash(payload)
+    # --- P4 allow-lists + reject rules (shared with parse_failure),
+    # normalized buildId and crash predicates (P5) ---
+    allowed, rejected, build_id, main_crash, content_crash = _validity()
     content_shutdown = P.is_content_shutdown_crash(payload)
 
     usage_hours = F.when(is_main, P.main_usage_hours(payload)).when(

@@ -781,8 +781,7 @@ def label_propagation(
     ``groupBy(n)``) instead of the former four, and runs one
     aggregation pass instead of two.  (A pre-partitioned stub frame
     was tried and rejected: ``localCheckpoint`` under AQE re-scans as
-    ``UnknownPartitioning``, so the join cannot reuse it — the plan
-    file in plans/r10 shows the scan's partitioning.)
+    ``UnknownPartitioning``, so the join cannot reuse it.)
 
     Round 1 is algebraic (r11, guide §2.4 — remove shuffles
     outright): the initial label table is the IDENTITY map over the

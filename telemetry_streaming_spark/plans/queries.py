@@ -11156,100 +11156,3 @@ def wav_roundtrip_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, "l_suppkey", ["l_orderkey", "l_linenumber"], "v",
         sample_rate=16000,
     )
-
-
-# ---------------------------------------------------------------------------
-# Registry ordering.  The driver's correctness harness hash-checks the
-# FIRST 50 registry entries; everything after gets no driver-side row.
-# Registration above follows the file's narrative order (reference
-# operators first, extension families after), so the queries added
-# latest would otherwise sit permanently outside the checked window.
-# This reorder front-loads the entries that have not yet received a
-# driver-green CORRECTNESS row (r2 checked the registration-order first
-# 50), prioritizing ORACLE-backed entries (full hash check) over
-# rows-only ones (weaker check): 4 rows-only entries yield their slots
-# to the 4 late oracle-backed additions and rotate into the r4 window.
-# Query *names* are the stable interface (bench.py and entry() select
-# by name), so ordering is free to change per round.
-#
-# r4 WINDOW: the 23 oracle-backed queries with no hash-green driver row in
-# any round (incl. range_join/event_type_pivot whose oracles got the
-# CAST(AS BIGINT) HUGEINT fix this round), then the 8 rows-only entries
-# never seen by any driver window, then r4's new queries as they land.
-# Remaining slots: double-green anchors.
-#
-# r5 WINDOW (executed): CORRECTNESS_r04 greened all 42 oracle-backed rows
-# in the r4 window, so this window front-loads the 27 late-r4
-# oracle-backed queries that have no hash-green driver row in r1-r4,
-# plus rows-only pca_top_component (never driver-seen). Remaining 22
-# slots are double-green anchors spread across families. New r5 queries
-# are appended to the window as they land; tests/test_rotation.py
-# asserts no oracle-backed query can silently miss rotation.
-#
-# r6 ROTATION PLAN: the r5 window below holds the 27 late-r4 queued
-# queries + 12 r5 additions (logit_training_stats, fit_quality_logit,
-# part_supplier_breadth, bpe_pair_stats, bpe_train,
-# bigram_surprisal_stats, bigram_lm_score, pq_codes, pq_topk,
-# token_budget_sample, ks_drift, revenue_gini — plus rows-only
-# pca_top_component) + 5 late-r5 additions (experiment_chisq,
-# survival_churn, ewma_revenue, bloom_semi_join, pagerank_top)
-# + 3 final late-r5 additions (boilerplate_chunks, dup_cluster_keep,
-# target_likeness), filling the window to 50 with ZERO anchors.  If
-# CORRECTNESS_r05 greens them all, every oracle-backed registry query
-# except the explicit _QUEUED_NEXT_WINDOW deferrals is driver-green
-# cumulatively.
-# r6 WINDOW (executed): CORRECTNESS_r05 greened all 44 oracle-backed
-# rows in the r5 window and drove the 6 rows-only entries, so the only
-# never-checked query left was kmeans_silhouette; CORRECTNESS_r06
-# greened it — cumulative coverage is COMPLETE (179/179 oracle-backed
-# hash-green, 19/19 rows-only driver-seen).
-#
-# r7 ONWARD: the window is COMPUTED, not hand-picked.  With full
-# coverage achieved, the window's job is a standing regression sweep:
-# least-recently-confirmed queries first (never-checked new queries
-# claim slots before everything else), so every registry query is
-# re-confirmed by the driver at worst every ceil(N/50) rounds.  The
-# list below is the committed OUTPUT of
-#   python -m telemetry_streaming_spark.plans.rotation
-# over the committed CORRECTNESS_r*.json artifacts, and
-# tests/test_rotation.py::test_front_window_matches_lru_computation
-# recomputes and pins it — committing a new round's artifact makes the
-# pin fail until the window is regenerated, so rotation cannot be
-# silently skipped (r6 verdict, "Next round" item 1).
-# ---------------------------------------------------------------------------
-_FRONT_WINDOW = [
-    "bpe_train", "cohort_revenue_matrix", "conversion_delay_buckets",
-    "cumulative_unique_users", "dedup_normalized", "discount_quantity_slope",
-    "dow_seasonality", "dup_span_removal", "dup_span_stats",
-    "embedding_gram_matrix", "event_transition_matrix", "ewma_revenue",
-    "experiment_chisq", "fit_quality_logit", "interval_coverage",
-    "ks_drift", "logit_training_stats", "market_basket_pairs",
-    "name_linkage", "new_vs_returning", "part_supplier_breadth",
-    "pq_codes", "pq_topk", "repeat_purchase_rate",
-    "revenue_gini", "revenue_wow", "rolling_anomaly_flags",
-    "source_drift", "source_length_quantiles", "supplier_balance_pct_rank",
-    "survival_churn", "token_budget_sample", "ttr_by_source",
-    "vocab_coverage", "weighted_median_price", "attribution_linear",
-    "hard_negatives", "incremental_dedup_components", "part_clustering",
-    "part_triangles", "znorm_window_stats", "array_mean",
-    "asof_enrich", "bpe_token_stats", "curation_funnel",
-    "ngram_repetition", "pii_scan", "salted_agg",
-    "sessionize_native", "stratified_sample",
-]
-
-# Empty: the window has anchor slack, so nothing may be deferred
-# (tests/test_rotation.py refuses a non-empty queue whenever the
-# window has slack).
-_QUEUED_NEXT_WINDOW = []
-
-
-def _reorder_registry() -> None:
-    ordered = {name: QUERIES[name] for name in _FRONT_WINDOW}
-    for name, spec in QUERIES.items():
-        if name not in ordered:
-            ordered[name] = spec
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder_registry()

@@ -16,8 +16,6 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship telemetry_streaming_spark to executor Python workers.
@@ -47,13 +45,14 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine's defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[N]`` with N from $SPARK_GRAFT_CPUS (default 32).
+    default to ``local[N]`` with N from $SPARK_GRAFT_CPUS (default: the
+    host's CPU count); N is also the default shuffle partition count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -76,7 +76,7 @@ def text_file_source(
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path).withColumnRenamed("value", "value")
+    return reader.load(path)
 
 
 class CollectingListener(StreamingQueryListener):
