@@ -35,7 +35,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _add_common(p: argparse.ArgumentParser, streaming_sink: bool = True) -> None:
+def _add_common(p: argparse.ArgumentParser, raise_on_error: bool = False) -> None:
     src = p.add_argument_group("source")
     src.add_argument("--kafka-broker")
     src.add_argument("--topic", default="telemetry")
@@ -51,13 +51,14 @@ def _add_common(p: argparse.ArgumentParser, streaming_sink: bool = True) -> None
     snk.add_argument("--checkpoint-path")
     snk.add_argument("--num-parquet-files", type=int, default=60)
     p.add_argument("--explain", action="store_true", help="print plan, do not run")
-    p.add_argument(
-        "--raise-on-error",
-        action="store_true",
-        help="exit nonzero if any input row is rejected by the parse stage "
-        "instead of silently dropping it (ErrorAggregatorBase.scala:220, "
-        "UptakeEventsToDatadog.scala:117-118)",
-    )
+    if raise_on_error:
+        p.add_argument(
+            "--raise-on-error",
+            action="store_true",
+            help="exit nonzero if any input row is rejected by the parse stage "
+            "instead of silently dropping it (ErrorAggregatorBase.scala:220, "
+            "UptakeEventsToDatadog.scala:117-118)",
+        )
 
 
 def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
@@ -99,19 +100,6 @@ def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
 
 def _write_text(df: DataFrame, col: str, path: str) -> None:
     df.select(col).write.mode("overwrite").text(path)
-
-
-def _finish(args, df: DataFrame, streaming_writer, batch_writer):
-    """Route a prepared frame: --explain prints, streaming starts the
-    query and blocks, batch executes the writer."""
-    if args.explain:
-        df.explain("formatted")
-        return None
-    if streaming_writer is not None:
-        query = streaming_writer()
-        query.awaitTermination()
-        return query
-    return batch_writer()
 
 
 def _require(args, *names) -> None:
@@ -160,48 +148,29 @@ def _await_stream_with_reject_guard(spark, start):
 
 
 def run_error_aggregator(spark, args, experiments: bool = False):
-    raw, streaming = _source(spark, args)
-    if experiments:
-        from telemetry_streaming_spark.jobs import experiments_error_aggregator as job
-
-        agg = job.aggregate(raw, streaming=streaming)
-        if args.explain:
-            agg.explain("formatted")
-            return
-        _require(args, "output-path")
-        if streaming:
-            _require(args, "checkpoint-path")
-            q = (
-                agg.repartition(1).writeStream.queryName("main_query")
-                .format("parquet").option("path", args.output_path)
-                .option("checkpointLocation", args.checkpoint_path)
-                .outputMode("append").start()
-            )
-            q.awaitTermination()
-        else:
-            agg.repartition(args.num_parquet_files).write.mode("overwrite").parquet(args.output_path)
-        return
     from telemetry_streaming_spark.jobs import error_aggregator as job
 
+    raw, streaming = _source(spark, args)
+    shape = {}
+    if experiments:
+        from telemetry_streaming_spark.jobs.experiments_error_aggregator import SHAPE as shape
     if args.explain:
-        job.aggregate(raw, streaming=streaming).explain("formatted")
+        job.aggregate(raw, **shape)[0].explain("formatted")
         return
     _require(args, "output-path")
-    raise_on_error = getattr(args, "raise_on_error", False)
     if streaming:
         _require(args, "checkpoint-path")
-        if raise_on_error:
-            _await_stream_with_reject_guard(
-                spark,
-                lambda: job.write_streaming(
-                    raw, args.output_path, args.checkpoint_path, raise_on_error=True
-                ),
-            )
+
+        def start():
+            return job.write_streaming(raw, args.output_path, args.checkpoint_path, **shape)
+
+        if args.raise_on_error:
+            _await_stream_with_reject_guard(spark, start)
         else:
-            job.write_streaming(raw, args.output_path, args.checkpoint_path).awaitTermination()
+            start().awaitTermination()
     else:
         job.write_batch(
-            raw, args.output_path, args.num_parquet_files, raise_on_error=raise_on_error
+            raw, args.output_path, args.num_parquet_files, args.raise_on_error, **shape
         )
 
 
@@ -262,12 +231,7 @@ def run_uptake_to_datadog(spark, args):
     from telemetry_streaming_spark.jobs import uptake_to_datadog as job
 
     raw, streaming = _source(spark, args)
-    raise_on_error = getattr(args, "raise_on_error", False)
-    obs = None
-    if raise_on_error:
-        m, obs = job.metrics_guarded(raw, streaming=streaming)
-    else:
-        m = job.metrics(raw)
+    m, counts = job.metrics(raw)
     if args.explain:
         m.explain("formatted")
         return
@@ -294,7 +258,7 @@ def run_uptake_to_datadog(spark, args):
                 .start()
             )
 
-        if raise_on_error:
+        if args.raise_on_error:
             _await_stream_with_reject_guard(spark, start)
         else:
             start().awaitTermination()
@@ -317,15 +281,14 @@ def run_uptake_to_datadog(spark, args):
     else:
         _require(args, "output-path")
         m.write.mode("overwrite").parquet(args.output_path)
-    if obs is not None:
-        from telemetry_streaming_spark.observability import (
-            ParseRejectionError,
-            observation_counts,
-        )
+    if args.raise_on_error:
+        from telemetry_streaming_spark.observability import ParseRejectionError
 
-        counts = observation_counts(obs, lambda: job.count_parse_failures(raw))
-        if counts.get("rows_rejected"):
-            raise ParseRejectionError(counts)
+        # foreachPartition is an RDD job, which never completes the
+        # observation: the statsd path recounts instead.
+        seen = counts(observed=not args.statsd_host)
+        if seen["rows_rejected"]:
+            raise ParseRejectionError(seen)
 
 
 def run_crashes(spark, args, protocol: str):
@@ -1912,14 +1875,14 @@ def build_parser() -> argparse.ArgumentParser:
 
     for name in ("error_aggregator", "experiments_error_aggregator", "event_ping_events",
                  "experiment_enrollments"):
-        _add_common(sub.add_parser(name))
+        _add_common(sub.add_parser(name), raise_on_error=name.endswith("error_aggregator"))
 
     p = sub.add_parser("enrollments_to_testtube")
     _add_common(p)
     p.add_argument("--url")
 
     p = sub.add_parser("uptake_to_datadog")
-    _add_common(p)
+    _add_common(p, raise_on_error=True)
     p.add_argument("--statsd-host")
     p.add_argument("--statsd-port", type=int, default=8125)
 

@@ -18,6 +18,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from telemetry_streaming_spark.observability import (
+    observation_counts,
+    observe_counts,
+    reject_counters,
+)
 from telemetry_streaming_spark.schemas import ping_schema
 
 SECONDS_PER_HOUR = 3600
@@ -29,12 +34,12 @@ def parsed_pings_raw(raw: DataFrame, value_col: str = "value") -> DataFrame:
     an undecodable envelope (PERMISSIVE columnNameOfCorruptRecord) and
     is null for well-formed rows.
 
-    This is the observation attach point for ``--raise-on-error`` — a
-    rejection counter must see undecodable rows before they are
-    dropped.  A null-struct check is NOT enough: Spark's PERMISSIVE
-    ``from_json`` yields a struct of all-null FIELDS for malformed
-    input, not a null struct, so only the corrupt-record column
-    distinguishes 'undecodable' from 'decoded but empty'."""
+    This is where :func:`guarded_parse` attaches the ``parse_guard``
+    observation — a rejection counter must see undecodable rows before
+    they are dropped.  A null-struct check is NOT enough: Spark's
+    PERMISSIVE ``from_json`` yields a struct of all-null FIELDS for
+    malformed input, not a null struct, so only the corrupt-record
+    column distinguishes 'undecodable' from 'decoded but empty'."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType(ping_schema().fields + [StructField("__corrupt", StringType())])
@@ -51,6 +56,11 @@ def parsed_pings_raw(raw: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
+def undecodable() -> Column:
+    """Over :func:`parsed_pings_raw` rows: the envelope did not decode."""
+    return F.col("__corrupt").isNotNull() | F.col("ping").isNull()
+
+
 def parse_pings(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """P1/P2: JSON envelope -> typed `ping` struct column.
 
@@ -58,11 +68,41 @@ def parse_pings(raw: DataFrame, value_col: str = "value") -> DataFrame:
     undecodable messages, ErrorAggregatorBase:229-236), detected via
     the corrupt-record column (see :func:`parsed_pings_raw`).
     """
-    return (
-        parsed_pings_raw(raw, value_col)
-        .where(F.col("__corrupt").isNull() & F.col("ping").isNotNull())
-        .select("ping")
-    )
+    return parsed_pings_raw(raw, value_col).where(~undecodable()).select("ping")
+
+
+def guarded_parse(raw: DataFrame, rejected: Column):
+    """:func:`parse_pings` with the ``parse_guard`` observation
+    (``rows_seen``, ``rows_rejected``) attached before the drop filter;
+    returns ``(pings, counts)``.  ``rejected`` is the job's flag over
+    :func:`parsed_pings_raw` rows.
+
+    The reference lets parse exceptions propagate
+    (ErrorAggregatorBase.scala:220); the engine's parse never throws,
+    so the same rows are COUNTED in the same pass — no second scan.
+    ``counts()`` returns them once a Dataset action on a plan built
+    from ``pings`` has finished; on the empty-result path, where
+    ``Observation.get`` cannot deliver (``observability.
+    observation_counts``), it recounts in one scan of the parse stage.
+    ``counts(observed=False)`` always recounts: an RDD job such as
+    ``DataFrame.foreachPartition`` never completes the observation.
+    Streaming input attaches by name and ``counts`` is ``None``; read
+    ``QueryProgressEvent.observedMetrics["parse_guard"]``."""
+    parsed = parsed_pings_raw(raw)
+    counters = reject_counters(rejected)
+    guarded, obs = observe_counts(parsed, "parse_guard", streaming=raw.isStreaming, **counters)
+    pings = guarded.where(~undecodable()).select("ping")
+    if obs is None:
+        return pings, None
+
+    def recount() -> dict:
+        row = parsed.agg(*[c.alias(k) for k, c in counters.items()]).first()
+        return {"rows_seen": row["rows_seen"], "rows_rejected": row["rows_rejected"] or 0}
+
+    def counts(observed: bool = True) -> dict:
+        return observation_counts(obs, recount) if observed else recount()
+
+    return pings, counts
 
 
 # --- P9: timestamp normalization (Ping.scala:169-171, StreamingJobBase:59-61)

@@ -85,20 +85,18 @@ def validity_flags() -> tuple[Column, Column]:
 
 
 def parse_failure() -> Column:
-    """The rows ``--raise-on-error`` must flag, evaluated over the
-    PRE-drop parse output (functions/pings.parsed_pings_raw):
-    undecodable JSON (corrupt-record column set), or a reject rule
-    tripped on an allow-listed ping.  Allow-list misses are
+    """The rows the ``parse_guard`` observation counts as rejected,
+    evaluated over the PRE-drop parse output
+    (functions/pings.parsed_pings_raw): undecodable JSON, or a reject
+    rule tripped on an allow-listed ping.  Allow-list misses are
     intentional filtering in the reference too, so they never count."""
     allowed, rejected = validity_flags()
     # NULL counts as rejected: a NULL reject rule (e.g. core ping
     # with payload.os null) makes prepare()'s `allowed & ~rejected`
     # filter NULL -> the row is DROPPED, so the flag must count it
     # too or --raise-on-error exits 0 on silently-dropped input.
-    return (
-        F.col("__corrupt").isNotNull()
-        | F.col("ping").isNull()
-        | (F.coalesce(allowed, F.lit(False)) & F.coalesce(rejected, F.lit(True)))
+    return P.undecodable() | (
+        F.coalesce(allowed, F.lit(False)) & F.coalesce(rejected, F.lit(True))
     )
 
 
@@ -236,72 +234,42 @@ def _window_aggregate(
 
 def aggregate(
     raw: DataFrame,
-    streaming: bool = False,
     dimensions: list[str] | None = None,
     stats: list[str] | None = None,
-) -> DataFrame:
+):
     """A1: 5-minute tumbling-window multi-sum over all dimensions
-    (ErrorAggregatorBase.scala:238-256).  Streaming adds the 1-minute
-    watermark (W1) for state bounding; schema identical either way.
+    (ErrorAggregatorBase.scala:238-256).  Streaming input adds the
+    1-minute watermark (W1) for state bounding; schema identical
+    either way.
+
+    Returns ``(df, counts)``: the plan carries the ``parse_guard``
+    observation of :func:`parse_failure` rows, and ``counts()`` reads
+    it after a batch action (``counts`` is ``None`` for streaming
+    input — see ``functions/pings.guarded_parse``).
 
     ``dimensions``/``stats`` default to the full ErrorAggregator
     schema; ExperimentsErrorAggregator passes its subsets
     (ExperimentsErrorAggregator.scala:16-39).
     """
-    from telemetry_streaming_spark.functions.pings import parse_pings
-
-    return _window_aggregate(prepare(parse_pings(raw)), streaming, dimensions, stats)
-
-
-def aggregate_guarded(
-    raw: DataFrame,
-    streaming: bool = False,
-    dimensions: list[str] | None = None,
-    stats: list[str] | None = None,
-):
-    """``aggregate()`` with the parse-rejection observation attached
-    BEFORE the null-filter: returns ``(df, observation)`` (observation
-    is ``None`` for streaming — read the per-batch metrics from
-    ``observedMetrics["parse_guard"]``).
-
-    This is the --raise-on-error surface (ErrorAggregatorBase.scala:
-    220): the reference lets parse exceptions propagate; the engine's
-    parse never throws, so the equivalent contract is 'the same rows
-    are COUNTED in the same pass, and the caller raises when the count
-    is nonzero'.  Zero extra scans — the observation rides the
-    existing plan."""
-    from telemetry_streaming_spark.functions.pings import parsed_pings_raw
-    from telemetry_streaming_spark.observability import observe_counts
-
-    parsed = parsed_pings_raw(raw)
-    bad = parse_failure()
-    parsed, obs = observe_counts(
-        parsed,
-        "parse_guard",
-        streaming=streaming,
-        rows_seen=F.count(F.lit(1)),
-        rows_rejected=F.sum(bad.cast("long")),
-    )
-    rows = prepare(
-        parsed.where(F.col("__corrupt").isNull() & F.col("ping").isNotNull()).select("ping")
-    )
-    return _window_aggregate(rows, streaming, dimensions, stats), obs
+    pings, counts = P.guarded_parse(raw, parse_failure())
+    return _window_aggregate(prepare(pings), raw.isStreaming, dimensions, stats), counts
 
 
 def write_streaming(
-    raw: DataFrame, output_path: str, checkpoint_path: str, raise_on_error: bool = False
+    raw: DataFrame,
+    output_path: str,
+    checkpoint_path: str,
+    dimensions: list[str] | None = None,
+    stats: list[str] | None = None,
 ):
     """K1: append-mode date-partitioned parquet, one file per batch
     (repartition(1), ErrorAggregatorBase.scala:146-154).
 
-    ``raise_on_error`` attaches the parse_guard observation; the CLI
-    registers a :func:`make_reject_guard_listener` and stops the query
-    when a micro-batch reports rejected rows."""
-    agg = (
-        aggregate_guarded(raw, streaming=True)[0]
-        if raise_on_error
-        else aggregate(raw, streaming=True)
-    )
+    Every micro-batch reports ``observedMetrics["parse_guard"]`` on its
+    progress; under --raise-on-error the CLI registers a
+    :func:`make_reject_guard_listener` and stops the query when a
+    micro-batch reports rejected rows."""
+    agg, _ = aggregate(raw, dimensions, stats)
     return (
         agg.repartition(1)
         .writeStream.queryName("main_query")
@@ -315,49 +283,31 @@ def write_streaming(
 
 
 def write_batch(
-    raw: DataFrame, output_path: str, num_files: int = 60, raise_on_error: bool = False
-) -> None:
+    raw: DataFrame,
+    output_path: str,
+    num_files: int = 60,
+    raise_on_error: bool = False,
+    dimensions: list[str] | None = None,
+    stats: list[str] | None = None,
+) -> dict:
     """K2: dynamic-partition-overwrite parquet
     (ErrorAggregatorBase.scala:168-173).
 
-    ``raise_on_error``: after the write completes, raise
-    :class:`ParseRejectionError` if any input row was rejected by the
-    parse stage (counted in the same pass — no second scan), matching
-    the reference's --raise-on-error exception propagation."""
-    if raise_on_error:
-        agg, obs = aggregate_guarded(raw, streaming=False)
-    else:
-        agg, obs = aggregate(raw, streaming=False), None
+    Returns the ``parse_guard`` counts (``rows_seen``,
+    ``rows_rejected``), counted in the same pass as the write.
+    ``raise_on_error``: raise :class:`ParseRejectionError` after the
+    write when any input row was rejected, matching the reference's
+    --raise-on-error exception propagation."""
+    from telemetry_streaming_spark.observability import ParseRejectionError
+
+    agg, counts = aggregate(raw, dimensions, stats)
     (
         agg.repartition(num_files)
         .write.mode("overwrite")
         .partitionBy("submission_date_s3")
         .parquet(output_path)
     )
-    if obs is not None:
-        from telemetry_streaming_spark.observability import (
-            ParseRejectionError,
-            observation_counts,
-        )
-
-        counts = observation_counts(obs, lambda: count_parse_failures(raw))
-        if counts.get("rows_rejected"):
-            raise ParseRejectionError(counts)
-
-
-def count_parse_failures(raw: DataFrame) -> dict:
-    """Explicit parse-failure recount — the fallback for the empty-
-    result path where Observation.get cannot deliver (see
-    observability.observation_counts); one scan of the parse stage
-    only, no aggregation pipeline."""
-    from telemetry_streaming_spark.functions.pings import parsed_pings_raw
-
-    row = (
-        parsed_pings_raw(raw)
-        .agg(
-            F.count(F.lit(1)).alias("rows_seen"),
-            F.sum(parse_failure().cast("long")).alias("rows_rejected"),
-        )
-        .first()
-    )
-    return {"rows_seen": row["rows_seen"], "rows_rejected": row["rows_rejected"] or 0}
+    seen = counts()
+    if raise_on_error and seen["rows_rejected"]:
+        raise ParseRejectionError(seen)
+    return seen

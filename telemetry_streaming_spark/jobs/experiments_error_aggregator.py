@@ -13,11 +13,12 @@ from telemetry_streaming_spark.schemas import (
     EXPERIMENT_ERROR_DIMENSIONS,
 )
 
+# The reference's job extends ErrorAggregatorBase and overrides only the
+# schema, so the base's aggregate() and writers take this as keyword args.
+SHAPE = {"dimensions": EXPERIMENT_ERROR_DIMENSIONS, "stats": ERROR_AGGREGATE_METRICS}
 
-def aggregate(raw: DataFrame, streaming: bool = False) -> DataFrame:
-    return error_aggregator.aggregate(
-        raw,
-        streaming=streaming,
-        dimensions=EXPERIMENT_ERROR_DIMENSIONS,
-        stats=list(ERROR_AGGREGATE_METRICS),
-    )
+
+def aggregate(raw: DataFrame):
+    """``error_aggregator.aggregate`` over the reduced schema: returns
+    ``(df, counts)``."""
+    return error_aggregator.aggregate(raw, **SHAPE)

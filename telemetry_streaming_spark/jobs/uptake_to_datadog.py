@@ -36,55 +36,24 @@ def _uptake_events(ping) -> Column:
     )
 
 
-def metrics(raw: DataFrame) -> DataFrame:
+def parse_failure() -> Column:
+    """The rows the ``parse_guard`` observation counts as rejected:
+    undecodable envelopes, the only throw-path this job has
+    (UptakeEventsToDatadog.scala:117-118).  docType and event-category
+    misses are intentional drops."""
+    return P.undecodable()
+
+
+def metrics(raw: DataFrame):
     """One row per DogStatsD metric: counters for every event, timer
-    metrics when extra.duration / extra.age parse as ints."""
-    return _metrics_parsed(P.parse_pings(raw))
+    metrics when extra.duration / extra.age parse as ints.
 
-
-def metrics_guarded(raw: DataFrame, streaming: bool = False):
-    """``metrics()`` with the parse-rejection observation attached
-    BEFORE the null-filter: returns ``(df, observation)``.  The
-    --raise-on-error surface (UptakeEventsToDatadog.scala:117-118):
-    undecodable envelopes are counted in the same pass and the caller
-    raises when the count is nonzero (the only throw-path this job has
-    — event filtering/docType misses are intentional drops).
-    ``streaming=True`` attaches the observation by name (observation
-    comes back None; per-batch values surface via
-    QueryProgressEvent.observedMetrics, read by the CLI's guard
-    listener exactly like error_aggregator's)."""
-    from telemetry_streaming_spark.observability import observe_counts
-
-    parsed = P.parsed_pings_raw(raw)
-    bad = F.col("__corrupt").isNotNull() | F.col("ping").isNull()
-    parsed, obs = observe_counts(
-        parsed,
-        "parse_guard",
-        streaming=streaming,
-        rows_seen=F.count(F.lit(1)),
-        rows_rejected=F.sum(bad.cast("long")),
-    )
-    return (
-        _metrics_parsed(
-            parsed.where(F.col("__corrupt").isNull() & F.col("ping").isNotNull()).select("ping")
-        ),
-        obs,
-    )
-
-
-def count_parse_failures(raw: DataFrame) -> dict:
-    """Explicit recount fallback for the empty-result path where
-    Observation.get cannot deliver (observability.observation_counts)."""
-    bad = F.col("__corrupt").isNotNull() | F.col("ping").isNull()
-    row = (
-        P.parsed_pings_raw(raw)
-        .agg(
-            F.count(F.lit(1)).alias("rows_seen"),
-            F.sum(bad.cast("long")).alias("rows_rejected"),
-        )
-        .first()
-    )
-    return {"rows_seen": row["rows_seen"], "rows_rejected": row["rows_rejected"] or 0}
+    Returns ``(df, counts)``: the plan carries the ``parse_guard``
+    observation of :func:`parse_failure` rows, and ``counts()`` reads
+    it after a batch action (``counts`` is ``None`` for streaming
+    input — see ``functions/pings.guarded_parse``)."""
+    pings, counts = P.guarded_parse(raw, parse_failure())
+    return _metrics_parsed(pings), counts
 
 
 def _metrics_parsed(parsed: DataFrame) -> DataFrame:

@@ -87,10 +87,12 @@ def observation_counts(obs, fallback) -> dict:
 
 
 class ParseRejectionError(RuntimeError):
-    """Raised by the --raise-on-error mode when a batch/micro-batch
-    contained rows the parse stage would silently drop (the engine's
-    equivalent of the reference's raiseOnError exception propagation,
-    ErrorAggregatorBase.scala:220, UptakeEventsToDatadog.scala:117)."""
+    """Raised under --raise-on-error when a batch or micro-batch had
+    rows the parse stage dropped, as counted by the ``parse_guard``
+    observation every ErrorAggregator and UptakeToDatadog plan carries
+    (the engine's equivalent of the reference's raiseOnError exception
+    propagation, ErrorAggregatorBase.scala:220,
+    UptakeEventsToDatadog.scala:117)."""
 
     def __init__(self, counts: dict):
         self.counts = counts
@@ -130,11 +132,12 @@ def make_reject_guard_listener(name: str = "parse_guard"):
     return RejectGuardListener()
 
 
-def reject_counters(valid: Column) -> dict[str, Column]:
+def reject_counters(rejected: Column) -> dict[str, Column]:
     """The standard pair: rows seen / rows rejected, for the
     exception-as-filter parity mode (SURVEY §7.4 risk 3 —
-    ``raiseOnError`` becomes 'assert rejected == 0')."""
+    ``raiseOnError`` becomes 'assert rejected == 0').  ``rejected``
+    must be non-NULL: a NULL flag is summed as not rejected."""
     return {
         "rows_seen": F.count(F.lit(1)),
-        "rows_rejected": F.sum(F.when(~valid, 1).otherwise(0)),
+        "rows_rejected": F.sum(rejected.cast("long")),
     }

@@ -207,6 +207,68 @@ def test_raise_on_error_batch_trips_on_malformed_ping(spark, tmp_path):
         ], spark=spark)
 
 
+def test_default_batch_run_reports_parse_guard_counts(spark, tmp_path):
+    """The parse_guard observation is always on: without
+    --raise-on-error a batch run with one malformed row exits 0, and
+    write_batch returns the counts the CLI would have raised on."""
+    from telemetry_streaming_spark.jobs import error_aggregator
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "pings.jsonl").write_text(main_ping() + "\n{not valid json\n")
+    main(["error_aggregator", "--input-path", str(src),
+          "--output-path", str(tmp_path / "out1")], spark=spark)
+    counts = error_aggregator.write_batch(
+        spark.read.text(str(src)), str(tmp_path / "out2"), num_files=1
+    )
+    assert counts == {"rows_seen": 2, "rows_rejected": 1}
+
+
+def test_explain_prints_the_guarded_plan(spark, tmp_path, capsys):
+    """--explain prints the plan that runs, parse_guard node included."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "pings.jsonl").write_text(main_ping() + "\n")
+    main(["error_aggregator", "--input-path", str(src), "--explain"], spark=spark)
+    assert "CollectMetrics" in capsys.readouterr().out
+
+
+def test_experiments_error_aggregator_shares_the_base_writer(spark, tmp_path):
+    """ExperimentsErrorAggregator extends ErrorAggregatorBase: its
+    batch output is date-partitioned and --raise-on-error applies."""
+    from telemetry_streaming_spark.observability import ParseRejectionError
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "pings.jsonl").write_text(main_ping() + "\n")
+    out = tmp_path / "out"
+    main(["experiments_error_aggregator", "--input-path", str(src),
+          "--output-path", str(out), "--num-parquet-files", "1"], spark=spark)
+    assert any(d.startswith("submission_date_s3=") for d in os.listdir(out))
+    got = spark.read.parquet(str(out))
+    assert "build_id" not in got.columns
+    assert got.agg({"count": "sum"}).first()[0] == 2  # experiment1 + null slice
+
+    (src / "bad.jsonl").write_text("{not valid json\n")
+    with pytest.raises(ParseRejectionError, match="1 of 2"):
+        main(["experiments_error_aggregator", "--input-path", str(src),
+              "--output-path", str(tmp_path / "out2"), "--raise-on-error"], spark=spark)
+
+
+def test_raise_on_error_only_on_guarded_jobs():
+    """--raise-on-error exists only where a parse_guard plan reads it;
+    elsewhere it is an unknown option."""
+    parser = build_parser()
+    sub = next(a for a in parser._actions if a.dest == "job")
+    guarded = {
+        name for name, p in sub.choices.items()
+        if any("--raise-on-error" in a.option_strings for a in p._actions)
+    }
+    assert guarded == {"error_aggregator", "experiments_error_aggregator", "uptake_to_datadog"}
+    with pytest.raises(SystemExit):
+        main(["events_to_amplitude", "--input-path", "/x", "--raise-on-error"])
+
+
 def test_raise_on_error_batch_clean_input_passes(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
@@ -240,6 +302,38 @@ def test_raise_on_error_uptake_to_datadog(spark, tmp_path):
             "uptake_to_datadog", "--input-path", str(src),
             "--output-path", str(out2), "--raise-on-error",
         ], spark=spark)
+
+
+@pytest.mark.parametrize("raise_on_error", [False, True])
+def test_uptake_to_datadog_batch_statsd(spark, tmp_path, raise_on_error):
+    """Batch push to a DogStatsD UDP socket finishes, with and without
+    --raise-on-error.  The push is an RDD job that never completes the
+    parse_guard observation, so reading it would block forever; the
+    raise path recounts instead."""
+    import socket
+
+    from telemetry_streaming_spark.observability import ParseRejectionError
+    from tests.fixtures import event_ping
+
+    ev = [5, "normandy", "enroll", "preference_study", "pref-flip", {"branch": "six"}]
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "pings.jsonl").write_text(event_ping(events={"dynamic": [ev]}) + "\nnot-json\n")
+    recv = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+    recv.bind(("127.0.0.1", 0))
+    recv.settimeout(5)
+    argv = ["uptake_to_datadog", "--input-path", str(src), "--statsd-host", "127.0.0.1",
+            "--statsd-port", str(recv.getsockname()[1])]
+    try:
+        if raise_on_error:
+            with pytest.raises(ParseRejectionError, match="1 of 2"):
+                main(argv + ["--raise-on-error"], spark=spark)
+        else:
+            main(argv, spark=spark)
+        data = recv.recv(1024).decode()
+    finally:
+        recv.close()
+    assert data.startswith("telemetry.normandy.preference_study.enroll:1|c")
 
 
 def test_cli_hygiene_end_to_end(spark, tmp_path, capsys):
@@ -421,7 +515,7 @@ def test_uptake_streaming_parquet_metrics(spark, tmp_path):
     src = tmp_path / "in2"
     src.mkdir()
     (src / "pings.jsonl").write_text(ping + "\n")
-    m = job.metrics(text_file_source(spark, str(src)))
+    m, _ = job.metrics(text_file_source(spark, str(src)))
     q = (
         m.writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))
@@ -434,7 +528,7 @@ def test_uptake_streaming_parquet_metrics(spark, tmp_path):
     finally:
         stop_quietly(q)
     got = spark.read.parquet(str(tmp_path / "out"))
-    batch = job.metrics(spark.createDataFrame([(ping,)], "value string"))
+    batch, _ = job.metrics(spark.createDataFrame([(ping,)], "value string"))
     assert sorted(r.name for r in got.collect()) == sorted(
         r.name for r in batch.collect()
     )

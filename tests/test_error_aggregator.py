@@ -11,7 +11,7 @@ K = 5  # reference uses k messages per type
 
 
 def agg_rows(spark, pings):
-    return aggregate(to_df(spark, pings)).collect()
+    return aggregate(to_df(spark, pings))[0].collect()
 
 
 def test_experiment_fanout_three_rows(spark):
@@ -135,7 +135,7 @@ def test_usage_hours_clamped(spark):
 def test_no_client_id_column(spark):
     """client_id feeds pre-agg rows but must not survive aggregation
     (ErrorAggregatorTest.scala:346-353)."""
-    df = aggregate(to_df(spark, [main_ping()]))
+    df, _ = aggregate(to_df(spark, [main_ping()]))
     assert "client_id" not in df.columns
 
 

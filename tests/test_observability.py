@@ -57,7 +57,7 @@ def test_sink_metrics_aggregate_across_partitions(spark):
 
 def test_observe_counts_rides_the_plan(spark):
     df = spark.range(100).withColumn("ok", F.col("id") % 10 != 0)
-    observed, obs = observe_counts(df, "gate", **reject_counters(F.col("ok")))
+    observed, obs = observe_counts(df, "gate", **reject_counters(~F.col("ok")))
     kept = observed.where("ok").count()
     got = obs.get
     assert got["rows_seen"] == 100

@@ -10,7 +10,7 @@ from tests.fixtures import TEST_TIMESTAMP_NS, crash_ping, event_ping, main_ping,
 
 
 def test_experiments_error_aggregator_subset_schema(spark):
-    df = exp_agg(to_df(spark, [main_ping()]))
+    df, _ = exp_agg(to_df(spark, [main_ping()]))
     cols = set(df.columns)
     assert "os_version" not in cols and "build_id" not in cols
     assert {"submission_date_s3", "channel", "version", "os_name", "country",
@@ -52,7 +52,7 @@ def test_datadog_normandy_counter(spark):
     """normandy event -> counter telemetry.{cat}.{object}.{method}
     tagged experiment/branch (UptakeEventsToDatadogTest.scala:14-59)."""
     ev = [5, "normandy", "enroll", "preference_study", "pref-flip", {"branch": "six"}]
-    rows = uptake_to_datadog.metrics(to_df(spark, [event_ping(events={"dynamic": [ev]})])).collect()
+    rows = uptake_to_datadog.metrics(to_df(spark, [event_ping(events={"dynamic": [ev]})]))[0].collect()
     assert len(rows) == 1
     m = rows[0]
     assert m.name == "telemetry.normandy.preference_study.enroll"
@@ -63,7 +63,7 @@ def test_datadog_normandy_counter(spark):
 def test_datadog_uptake_counter_and_timers(spark):
     ev = [5, "uptake.remotecontent.result", "uptake", "remotesettings", "success",
           {"source": "blocklists/addons/one", "duration": "120", "age": "33"}]
-    rows = uptake_to_datadog.metrics(to_df(spark, [event_ping(events={"dynamic": [ev]})])).collect()
+    rows = uptake_to_datadog.metrics(to_df(spark, [event_ping(events={"dynamic": [ev]})]))[0].collect()
     by_name = {r.name: r for r in rows}
     base = "telemetry.uptake.remotesettings.uptake.success"
     assert set(by_name) == {base, base + ".duration", base + ".age"}
@@ -78,7 +78,7 @@ def test_datadog_uptake_counter_and_timers(spark):
 def test_datadog_uptake_null_value_and_bad_duration(spark):
     ev = [5, "uptake.remotecontent.result", "uptake", "remotesettings", None,
           {"duration": "not-an-int"}]
-    rows = uptake_to_datadog.metrics(to_df(spark, [event_ping(events={"dynamic": [ev]})])).collect()
+    rows = uptake_to_datadog.metrics(to_df(spark, [event_ping(events={"dynamic": [ev]})]))[0].collect()
     assert len(rows) == 1  # counter only, no timer
     assert rows[0].name == "telemetry.uptake.remotesettings.uptake.null"
 

@@ -101,7 +101,7 @@ def test_error_aggregator_append_flush_on_watermark(spark, stream_dirs):
     assert ("experiment1", "control") in sums
     # streaming result == batch result for the flushed window
     batch = (
-        error_aggregator.aggregate(to_df(spark, first_batch))
+        error_aggregator.aggregate(to_df(spark, first_batch))[0]
         .select("window_start", "experiment_id", "count")
         .collect()
     )
@@ -119,7 +119,7 @@ def test_listener_observes_progress_and_watermark(spark, stream_dirs):
     _write_lines(stream_dirs["in"], [main_ping() for _ in range(4)])
 
     raw = text_file_source(spark, stream_dirs["in"])
-    agg = error_aggregator.aggregate(raw, streaming=True)
+    agg, _ = error_aggregator.aggregate(raw)
     query = (
         agg.writeStream.queryName(f"listener_test_{uuid.uuid4().hex[:8]}")
         .format("memory")
@@ -591,11 +591,31 @@ def test_foreachbatch_sketch_state_distinct_counts(spark, tmp_path):
     assert got == {"a": 12, "b": 2}  # 7 + 5 fresh for a; {1, 2} for b
 
 
+def test_default_write_streaming_reports_parse_guard(spark, stream_dirs):
+    """The parse_guard observation is always on: a default
+    write_streaming query reports rows seen and rejected on each
+    micro-batch's progress."""
+    os.makedirs(stream_dirs["out"], exist_ok=True)
+    _write_lines(stream_dirs["in"], [main_ping(), main_ping(), "{broken json"])
+    raw = text_file_source(spark, stream_dirs["in"])
+    query = error_aggregator.write_streaming(raw, stream_dirs["out"], stream_dirs["ckpt"])
+    try:
+        drain(query)
+        guards = [
+            p["observedMetrics"]["parse_guard"].asDict()
+            for p in query.recentProgress
+            if "parse_guard" in (p.get("observedMetrics") or {})
+        ]
+    finally:
+        stop_quietly(query)
+    assert {"rows_seen": 3, "rows_rejected": 1} in guards
+
+
 def test_streaming_reject_guard_trips_on_malformed_ping(spark, stream_dirs):
     """--raise-on-error streaming surface: the parse_guard observation
-    rides each micro-batch and the RejectGuardListener trips on the
-    first batch containing an undecodable envelope; clean batches
-    leave it untripped."""
+    rides each micro-batch of the default write_streaming query, and
+    the RejectGuardListener trips on the first batch containing an
+    undecodable envelope; clean batches leave it untripped."""
     from telemetry_streaming_spark.observability import make_reject_guard_listener
 
     guard = make_reject_guard_listener()
@@ -603,9 +623,7 @@ def test_streaming_reject_guard_trips_on_malformed_ping(spark, stream_dirs):
     os.makedirs(stream_dirs["out"], exist_ok=True)
     _write_lines(stream_dirs["in"], [main_ping(), main_ping()])
     raw = text_file_source(spark, stream_dirs["in"])
-    query = error_aggregator.write_streaming(
-        raw, stream_dirs["out"], stream_dirs["ckpt"], raise_on_error=True
-    )
+    query = error_aggregator.write_streaming(raw, stream_dirs["out"], stream_dirs["ckpt"])
     try:
         drain(query)
         assert guard.tripped is None  # clean batch: no trip
