@@ -18,9 +18,13 @@ of --input-path exactly like the reference's S3 date partitions).
 Source selection: --kafka-broker (streaming), --stream-input (file
 stream standing in for the topic — the S4 test source), or
 --input-path (batch; --format heka reads the reference's actual wire
-format via sources/heka.py).  HTTP/UDP-sink jobs accept --url /
---statsd-host, or --output-path as the offline fallback that writes
-the exact request bodies to files — the same payloads, inspectable.
+format via sources/heka.py).  The HTTP/UDP-sink jobs
+(enrollments_to_testtube, uptake_to_datadog, crashes_to_*,
+events_to_amplitude) run in both modes through one delivery path:
+--url / --statsd-host pushes through the job's ForeachWriter
+(``writeStream.foreach`` when streaming, per partition in batch), and
+--output-path is the offline fallback that writes the payload rows to
+files — the same payloads, inspectable.
 
 ``--explain`` prints the physical plan and exits without executing —
 the plan-review step a 100TB operator runs before launching.
@@ -96,10 +100,6 @@ def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
             out = out.unionByName(f)
         return out, False
     return spark.read.text(paths), False
-
-
-def _write_text(df: DataFrame, col: str, path: str) -> None:
-    df.select(col).write.mode("overwrite").text(path)
 
 
 def _require(args, *names) -> None:
@@ -210,89 +210,85 @@ def run_experiment_enrollments(spark, args):
         agg.write.mode("overwrite").parquet(args.output_path)
 
 
-def run_enrollments_to_testtube(spark, args):
-    from telemetry_streaming_spark.jobs import enrollments_to_testtube as job
-
-    raw, streaming = _source(spark, args)
-    rows = job.to_json_rows(job.aggregate(raw, streaming=streaming))
+def _run_sink_job(spark, args, df: DataFrame, sink, output_format: str = "text",
+                  counts=None, max_parallel_requests: int | None = None) -> None:
+    """The one delivery path of the HTTP/UDP sink jobs, in batch and
+    streaming.  ``df`` holds the payload rows and ``sink`` is the
+    ForeachWriter (``sinks/__init__.py``) for --url / --statsd-host,
+    or ``None`` to write the rows to --output-path as ``output_format``
+    instead.  Streaming delivers through ``writeStream.foreach(sink)``;
+    batch feeds each partition to a copy of the sink
+    (``push_partitions``).  ``counts`` is the batch ``parse_guard``
+    reader of a --raise-on-error job."""
     if args.explain:
-        rows.explain("formatted")
+        df.explain("formatted")
         return
-    if args.url:
-        from telemetry_streaming_spark.sinks.http import TestTubeHttpSink, push_partitions
-
-        push_partitions(rows, lambda: TestTubeHttpSink(args.url))
-    else:
+    if sink is None:
         _require(args, "output-path")
-        _write_text(rows, rows.columns[0], args.output_path)
-
-
-def run_uptake_to_datadog(spark, args):
-    from telemetry_streaming_spark.jobs import uptake_to_datadog as job
-
-    raw, streaming = _source(spark, args)
-    m, counts = job.metrics(raw)
-    if args.explain:
-        m.explain("formatted")
-        return
-    if streaming:
-        # The reference runs this job as a Kafka->DogStatsD stream
-        # (UptakeEventsToDatadog.scala:103-118); foreach(writer) is the
-        # ForeachWriter sink, parquet append is the offline fallback.
+    raise_on_error = getattr(args, "raise_on_error", False)
+    if df.isStreaming:
         _require(args, "checkpoint-path")
 
         def start():
-            if args.statsd_host:
-                from telemetry_streaming_spark.sinks.dogstatsd import DogStatsDMetricSink
-
-                writer = m.writeStream.foreach(
-                    DogStatsDMetricSink(args.statsd_host, args.statsd_port)
-                )
+            if sink is not None:
+                writer = df.writeStream.foreach(sink)
             else:
-                _require(args, "output-path")
-                writer = m.writeStream.format("parquet").option("path", args.output_path)
+                writer = df.writeStream.format(output_format).option("path", args.output_path)
             return (
-                writer.queryName("uptake_to_datadog")
+                writer.queryName(args.job)
                 .option("checkpointLocation", args.checkpoint_path)
                 .outputMode("append")
                 .start()
             )
 
-        if args.raise_on_error:
+        if raise_on_error:
             _await_stream_with_reject_guard(spark, start)
         else:
             start().awaitTermination()
         return
-    if args.statsd_host:
-        from telemetry_streaming_spark.sinks.dogstatsd import DogStatsDMetricSink
+    if sink is not None:
+        from telemetry_streaming_spark.sinks import push_partitions
 
-        host, port = args.statsd_host, args.statsd_port
-
-        def push(rows):
-            w = DogStatsDMetricSink(host, port)
-            w.open(0, 0)
-            try:
-                for r in rows:
-                    w.process(r)
-            finally:
-                w.close(None)
-
-        m.foreachPartition(push)
+        push_partitions(df, lambda: sink, max_parallel_requests=max_parallel_requests)
     else:
-        _require(args, "output-path")
-        m.write.mode("overwrite").parquet(args.output_path)
-    if args.raise_on_error:
+        df.write.mode("overwrite").format(output_format).save(args.output_path)
+    if raise_on_error:
         from telemetry_streaming_spark.observability import ParseRejectionError
 
         # foreachPartition is an RDD job, which never completes the
-        # observation: the statsd path recounts instead.
-        seen = counts(observed=not args.statsd_host)
+        # observation: the sink path recounts instead.
+        seen = counts(observed=sink is None)
         if seen["rows_rejected"]:
             raise ParseRejectionError(seen)
 
 
+def run_enrollments_to_testtube(spark, args):
+    from telemetry_streaming_spark.jobs import enrollments_to_testtube as job
+    from telemetry_streaming_spark.sinks.http import TestTubeHttpSink
+
+    raw, streaming = _source(spark, args)
+    # at most 10 parallel TestTube requests
+    # (ExperimentEnrollmentsToTestTube.scala:20, :54)
+    rows = job.to_json_rows(job.aggregate(raw, streaming=streaming)).coalesce(10)
+    _run_sink_job(spark, args, rows, TestTubeHttpSink(args.url) if args.url else None)
+
+
+def run_uptake_to_datadog(spark, args):
+    from telemetry_streaming_spark.jobs import uptake_to_datadog as job
+    from telemetry_streaming_spark.sinks.dogstatsd import DogStatsDMetricSink
+
+    raw, _ = _source(spark, args)
+    m, counts = job.metrics(raw)
+    # The reference runs this job as a Kafka->DogStatsD stream
+    # (UptakeEventsToDatadog.scala:103-118); parquet is the offline
+    # fallback.
+    sink = DogStatsDMetricSink(args.statsd_host, args.statsd_port) if args.statsd_host else None
+    _run_sink_job(spark, args, m, sink, output_format="parquet", counts=counts)
+
+
 def run_crashes(spark, args, protocol: str):
     from telemetry_streaming_spark.jobs import crashes as job
+    from telemetry_streaming_spark.sinks.http import BatchHttpSink
 
     raw, _ = _source(spark, args)
     if protocol == "influx":
@@ -301,64 +297,26 @@ def run_crashes(spark, args, protocol: str):
     else:
         lines = job.to_opentsdb(raw)
         prefix, sep, suffix = "[", ",", "]"
-    if args.explain:
-        lines.explain("formatted")
-        return
-    if args.url:
-        from telemetry_streaming_spark.sinks.http import BatchHttpSink, push_partitions
-
-        push_partitions(
-            lines,
-            lambda: BatchHttpSink(
-                args.url, prefix=prefix, sep=sep, suffix=suffix,
-                max_batch_size=args.max_batch_size,
-            ),
-            max_parallel_requests=args.max_parallel_requests,
-        )
-    else:
-        _require(args, "output-path")
-        _write_text(lines, lines.columns[0], args.output_path)
+    sink = BatchHttpSink(
+        args.url, prefix=prefix, sep=sep, suffix=suffix, max_batch_size=args.max_batch_size
+    ) if args.url else None
+    _run_sink_job(spark, args, lines, sink, max_parallel_requests=args.max_parallel_requests)
 
 
 def run_events_to_amplitude(spark, args):
     from telemetry_streaming_spark.jobs import events_to_amplitude as job
+    from telemetry_streaming_spark.sinks.http import AmplitudeHttpSink
 
     _require(args, "config")
     config = job.load_config(args.config)
     doctype, app_name = job.dispatch_for_config(config)
-    raw, streaming = _source(spark, args)
+    raw, _ = _source(spark, args)
     payloads = job.amplitude_payloads(
         raw, config, sample=args.sample, doctype=doctype, app_name=app_name
     )
-    events = job.exploded_events(payloads)
-    if args.explain:
-        events.explain("formatted")
-        return
-    if args.url:
-        from telemetry_streaming_spark.sinks.http import AmplitudeHttpSink
-
-        url = args.url
-        api_key = args.api_key or os.environ.get("AMPLITUDE_API_KEY", "")
-
-        def push(df):
-            df.select("event_json").foreachPartition(
-                lambda rows: AmplitudeHttpSink(url, api_key).send_events(
-                    [r.event_json for r in rows]
-                )
-            )
-
-        if streaming:
-            _require(args, "checkpoint-path")
-            (
-                events.writeStream.queryName("main_query")
-                .option("checkpointLocation", args.checkpoint_path)
-                .foreachBatch(lambda df, bid: push(df)).start().awaitTermination()
-            )
-        else:
-            push(events)
-    else:
-        _require(args, "output-path")
-        _write_text(events, events.columns[-1], args.output_path)
+    events = job.exploded_events(payloads).select("event_json")
+    api_key = args.api_key or os.environ.get("AMPLITUDE_API_KEY", "")
+    _run_sink_job(spark, args, events, AmplitudeHttpSink(args.url, api_key) if args.url else None)
 
 
 def run_federated_optimizer(spark, args):

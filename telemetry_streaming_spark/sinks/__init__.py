@@ -1,0 +1,61 @@
+"""Sink contract (K3-K7, K11): every HTTP/UDP sink is a ForeachWriter
+— ``open(partition_id, epoch_id) -> bool``, ``process(row)``,
+``close(error)`` — so one writer object serves both modes.  Streaming
+hands it to ``writeStream.foreach(sink)``; batch feeds each partition
+through :func:`write_partition`, the batch analog of the foreach sink
+(SURVEY §3.2 step 5).
+"""
+
+from __future__ import annotations
+
+import time
+
+
+def write_partition(sink, rows) -> None:
+    """Feed one partition's rows to ``sink`` under the ForeachWriter
+    contract: ``open``, ``process`` per row, then ``close`` with the
+    error that ended the partition (``None`` on success).  Batch has no
+    epochs, so the ids passed to ``open`` are 0."""
+    if not sink.open(0, 0):
+        return
+    try:
+        for row in rows:
+            sink.process(row)
+    except Exception as e:
+        sink.close(e)
+        raise
+    sink.close(None)
+
+
+def push_partitions(
+    df,
+    sink_factory,
+    max_parallel_requests: int | None = None,
+    min_delay_ms: int = 0,
+    key_col: str | None = None,
+):
+    """K11: batch-mode analog of the foreach sink — optionally
+    ``repartition(maxParallelRequests)``, then :func:`write_partition`
+    on every partition with a ``minDelay`` sleep for rate limiting
+    (EventsToAmplitude.scala:277-282, CrashPingStreamingBase.scala:
+    141-146).  Effective rate = 10^3 x max_parallel / min_delay req/s
+    (EventsToAmplitude.scala:29-36).  With ``max_parallel_requests``,
+    ``key_col`` co-locates a key's rows in one partition so one request
+    carries them (R4, Bug 1484819); otherwise round-robin (R6).
+    ``None`` pushes the frame's partitions as they are.
+
+    ``sink_factory()`` runs on the executor, so transports and metrics
+    must be picklable (SinkMetrics is).
+    """
+    import pyspark.sql.functions as F  # local: keep module import-light
+
+    if max_parallel_requests is not None:
+        keys = [F.col(key_col)] if key_col is not None else []
+        df = df.repartition(max_parallel_requests, *keys)
+
+    def run(rows) -> None:
+        write_partition(sink_factory(), rows)
+        if min_delay_ms:
+            time.sleep(min_delay_ms / 1000)
+
+    df.foreachPartition(run)

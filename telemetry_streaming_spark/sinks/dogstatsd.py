@@ -41,7 +41,7 @@ def format_datagram(
 
 class DogStatsDMetricSink:
     """ForeachWriter over rows (name, value, type, tags) — used with
-    ``df.writeStream.foreach(sink)`` or ``df.foreachPartition``."""
+    ``df.writeStream.foreach(sink)`` or, in batch, ``push_partitions``."""
 
     def __init__(self, host: str, port: int, sample_rate: float | None = None):
         self.host = host

@@ -1,5 +1,5 @@
-"""HTTP sink family (K3-K6, K11) — ForeachWriter / foreachPartition
-push with the reference's retry-and-batch semantics.
+"""HTTP sink family (K3-K6) — ForeachWriters (``sinks/__init__.py``)
+with the reference's retry-and-batch semantics.
 
 Reference: HttpSink.scala:24-196 — exponential backoff
 ``(2^tries - 1) * 500ms`` capped at 30s, max 5 attempts; configured
@@ -21,7 +21,9 @@ import logging
 import time
 import urllib.error
 import urllib.request
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+from telemetry_streaming_spark.sinks import write_partition
 
 log = logging.getLogger(__name__)
 
@@ -88,30 +90,35 @@ class HttpSink:
         """(2^tries - 1) * 500ms capped at 30s (HttpSink.scala:154-157)."""
         return min((2**tries - 1) * self.config.base_delay_ms, self.config.max_delay_ms)
 
-    def send(self, payload: str | bytes) -> bool:
-        body = payload.encode() if isinstance(payload, str) else payload
+    def _post(self, body: bytes) -> int:
+        """POST ``body``, retrying the retry codes with backoff up to
+        ``max_attempts``; returns the final status."""
         cfg = self.config
         timeout_s = (cfg.connection_timeout_ms + cfg.read_timeout_ms) / 1000
-        for attempt in range(1, cfg.max_attempts + 1):
+        attempt = 1
+        while True:
             code = self.transport(self.url, body, self.headers, timeout_s)
             if code in cfg.success_codes:
                 self._mark("success")
-                return True
-            if code == 413:
-                self._mark("payload_too_large")
-            elif code not in cfg.success_codes:
-                self._mark("error")
-            if code in cfg.retry_codes and attempt < cfg.max_attempts:
-                self.retries += 1
-                self._mark("retry")
-                time.sleep(self.backoff_ms(attempt) / 1000)
-                continue
-            log.warning("dropping payload after status %s (attempt %d)", code, attempt)
-            self.dropped += 1
-            self._mark("dropped")
-            return False
+                return code
+            self._mark("payload_too_large" if code == 413 else "error")
+            if code not in cfg.retry_codes or attempt >= cfg.max_attempts:
+                return code
+            self.retries += 1
+            self._mark("retry")
+            time.sleep(self.backoff_ms(attempt) / 1000)
+            attempt += 1
+
+    def _drop(self, code: int) -> None:
+        log.warning("dropping payload after status %s", code)
         self.dropped += 1
         self._mark("dropped")
+
+    def send(self, payload: str | bytes) -> bool:
+        code = self._post(payload.encode() if isinstance(payload, str) else payload)
+        if code in self.config.success_codes:
+            return True
+        self._drop(code)
         return False
 
     # ForeachWriter protocol (one payload string per row)
@@ -119,15 +126,21 @@ class HttpSink:
         return True
 
     def process(self, row) -> None:
-        self.send(row[0] if not isinstance(row, str) else row)
+        self.send(_value(row))
 
     def close(self, error) -> None:
         pass
 
 
+def _value(row) -> str:
+    """The payload string of a one-column row (or a bare string)."""
+    return row if isinstance(row, str) else row[0]
+
+
 class BatchHttpSink(HttpSink):
-    """K5: buffer ``max_batch_size`` strings, join with
-    prefix/sep/suffix, flush at capacity and on close
+    """K5: buffer up to ``max_batch_size`` strings (and, with
+    ``max_bytes``, up to that many bytes counted as ``2*len``), join
+    them with prefix/sep/suffix, flush at capacity and on close
     (CrashesBatchHttpSink.scala:10-53).  Influx: ""/\\n/"";
     OpenTSDB: "["/","/"]"."""
 
@@ -138,22 +151,36 @@ class BatchHttpSink(HttpSink):
         prefix: str = "",
         sep: str = "\n",
         suffix: str = "",
+        max_bytes: int | None = None,
         **kwargs,
     ):
         super().__init__(url, **kwargs)
         self.max_batch_size = max_batch_size
+        self.max_bytes = max_bytes
         self.prefix, self.sep, self.suffix = prefix, sep, suffix
         self.buffer: list[str] = []
+        self.buffer_bytes = 0
 
     def process(self, row) -> None:
-        self.buffer.append(row[0] if not isinstance(row, str) else row)
+        value = _value(row)
+        size = 2 * len(value)
+        if self.max_bytes is not None and self.buffer and self.buffer_bytes + size > self.max_bytes:
+            self.flush()
+        self.buffer.append(value)
+        self.buffer_bytes += size
         if len(self.buffer) >= self.max_batch_size:
             self.flush()
 
     def flush(self) -> None:
         if self.buffer:
-            self.send(self.prefix + self.sep.join(self.buffer) + self.suffix)
-            self.buffer = []
+            batch, self.buffer, self.buffer_bytes = self.buffer, [], 0
+            self._send_batch(batch)
+
+    def _body(self, batch: list[str]) -> str:
+        return self.prefix + self.sep.join(batch) + self.suffix
+
+    def _send_batch(self, batch: list[str]) -> None:
+        self.send(self._body(batch))
 
     def close(self, error) -> None:
         self.flush()
@@ -164,110 +191,38 @@ class TestTubeHttpSink(HttpSink):
     (TestTubeHttpSink.scala:13-18)."""
 
     def process(self, row) -> None:
-        value = row[0] if not isinstance(row, str) else row
-        self.send('{"enrollment":[' + value + "]}")
+        self.send('{"enrollment":[' + _value(row) + "]}")
 
 
-@dataclass
-class AmplitudeBatcher:
-    """K4 batcher: <= max_events events and <= max_bytes serialized
-    bytes per request (AmplitudeHttpSink.scala:43-67).  httpapi
-    endpoint caps at 512KB, batch endpoint at 10MB, both at 2000
-    events."""
+class AmplitudeHttpSink(BatchHttpSink):
+    """K4: POST event batches of <= 2000 events and <= 512KB (sized as
+    UTF-16, ``2*len``) to Amplitude (AmplitudeHttpSink.scala:43-67;
+    the httpapi endpoint's caps).  Event strings are ``to_json`` output
+    and are spliced into the body as they are.  An event larger than
+    the byte cap still forms its own batch — the reference's span
+    would loop emitting empty batches forever on that input.  On 413
+    the batch is split in half and each half resent
+    (AmplitudeHttpSink.scala:153-158).  Retries are unlimited in the
+    reference (Int.MaxValue) — modeled with a large max_attempts."""
 
-    max_events: int = 2000
-    max_bytes: int = 512 * 1024
-
-    def batch(self, events: list[str]) -> list[list[str]]:
-        """Maximal prefixes with cumulative 2*len(chars) <= max_bytes
-        and count <= max_events (the reference's span predicate,
-        AmplitudeHttpSink.scala:54-64, which sizes strings as UTF-16).
-        Deviation: a single event larger than max_bytes still forms
-        its own batch — the reference's span would loop emitting
-        empty batches forever on that input."""
-        out: list[list[str]] = []
-        current: list[str] = []
-        size = 0
-        for e in events:
-            e_bytes = 2 * len(e)
-            if current and (size + e_bytes > self.max_bytes or len(current) >= self.max_events):
-                out.append(current)
-                current, size = [], 0
-            current.append(e)
-            size += e_bytes
-        if current:
-            out.append(current)
-        return out
-
-
-class AmplitudeHttpSink(HttpSink):
-    """K4: POST event batches to Amplitude; on 413 split the batch in
-    half and resend recursively (AmplitudeHttpSink.scala:153-158).
-    Retries are unlimited in the reference (Int.MaxValue) — modeled
-    with a large max_attempts."""
-
-    def __init__(self, url: str, api_key: str, batcher: AmplitudeBatcher | None = None, **kwargs):
+    def __init__(self, url: str, api_key: str, **kwargs):
         kwargs.setdefault("config", HttpSinkConfig(max_attempts=1_000_000))
-        super().__init__(url, **kwargs)
-        self.api_key = api_key
-        self.batcher = batcher or AmplitudeBatcher()
+        kwargs.setdefault("max_batch_size", 2000)
+        kwargs.setdefault("max_bytes", 512 * 1024)
+        super().__init__(
+            url, prefix='{"api_key":' + json.dumps(api_key) + ',"events":[', sep=",",
+            suffix="]}", **kwargs,
+        )
 
-    def send_events(self, events: list[str]) -> None:
-        for batch in self.batcher.batch(events):
-            self._send_batch(batch)
+    def send_events(self, events) -> None:
+        """Deliver an iterable of event JSON strings as one partition."""
+        write_partition(self, events)
 
     def _send_batch(self, batch: list[str]) -> None:
-        payload = json.dumps({"api_key": self.api_key, "events": [json.loads(e) for e in batch]})
-        code_holder = {}
-
-        def capture(url, body, headers, timeout_s, _t=self.transport):
-            code = _t(url, body, headers, timeout_s)
-            code_holder["code"] = code
-            return code
-
-        original, self.transport = self.transport, capture
-        try:
-            ok = self.send(payload)
-        finally:
-            self.transport = original
-        if not ok and code_holder.get("code") == 413 and len(batch) > 1:
+        code = self._post(self._body(batch).encode())
+        if code == 413 and len(batch) > 1:
             mid = len(batch) // 2
             self._send_batch(batch[:mid])
             self._send_batch(batch[mid:])
-
-
-def push_partitions(
-    df,
-    sink_factory,
-    max_parallel_requests: int = 100,
-    min_delay_ms: int = 0,
-    key_col: str | None = None,
-):
-    """K11: batch-mode analog of the foreach sink —
-    ``repartition(maxParallelRequests)`` then per-partition push with a
-    ``minDelay`` sleep for rate limiting (EventsToAmplitude.scala:
-    277-282, CrashPingStreamingBase.scala:141-146).  Effective rate =
-    10^3 x max_parallel / min_delay req/s (EventsToAmplitude.scala:
-    29-36).  ``key_col`` co-locates a key's rows in one partition so
-    one request carries them (R4, Bug 1484819); otherwise round-robin
-    (R6).
-
-    ``sink_factory() -> HttpSink`` runs on the executor, so transports
-    and metrics must be picklable (SinkMetrics is).
-    """
-    import pyspark.sql.functions as F  # local: keep module import-light
-
-    if key_col is not None:
-        df = df.repartition(max_parallel_requests, F.col(key_col))
-    else:
-        df = df.repartition(max_parallel_requests)
-
-    def run(rows) -> None:
-        sink = sink_factory()
-        for row in rows:
-            sink.process(row)
-        sink.close(None)
-        if min_delay_ms:
-            time.sleep(min_delay_ms / 1000)
-
-    df.foreachPartition(run)
+        elif code not in self.config.success_codes:
+            self._drop(code)

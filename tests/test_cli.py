@@ -136,16 +136,23 @@ def test_explain_wires_every_job(spark, tmp_path):
     stream.mkdir()
     (stream / "s.jsonl").write_text(main_ping() + "\n")
 
+    from tests.test_events_to_amplitude import FOCUS_CONFIG
+
+    config = tmp_path / "focus.json"
+    config.write_text(json.dumps(FOCUS_CONFIG))
+    sink_jobs = [
+        ["enrollments_to_testtube"], ["uptake_to_datadog"],
+        ["crashes_to_influx"], ["crashes_to_opentsdb"],
+        ["events_to_amplitude", "--config", str(config)],
+    ]
     batch_jobs = [
         ["error_aggregator"], ["experiments_error_aggregator"],
         ["event_ping_events"], ["experiment_enrollments"],
-        ["enrollments_to_testtube"], ["uptake_to_datadog"],
-        ["crashes_to_influx"], ["crashes_to_opentsdb"],
-        ["events_to_amplitude", "--config",
-         "/root/reference/configs/focus_android_events_schemas.json"],
-    ]
+    ] + sink_jobs
     for job in batch_jobs:
         main(job + ["--input-path", str(src), "--explain"], spark=spark)
+    for job in sink_jobs:
+        main(job + ["--stream-input", str(stream), "--explain"], spark=spark)
     main([
         "federated_optimizer", "--stream-input", str(stream),
         "--state-path", str(tmp_path / "st"),

@@ -13,7 +13,6 @@ import pytest
 from telemetry_streaming_spark.sinks.dogstatsd import format_datagram
 from telemetry_streaming_spark.sinks import http as http_sinks
 from telemetry_streaming_spark.sinks.http import (
-    AmplitudeBatcher,
     AmplitudeHttpSink,
     BatchHttpSink,
     HttpSink,
@@ -113,13 +112,28 @@ def test_testtube_wrapper(http_server):
     assert http_server["requests"] == ['{"enrollment":[{"experiment_id":"a"}]}']
 
 
+def amplitude_batches(events, **caps):
+    """The event batches an AmplitudeHttpSink posts, read back from the
+    request bodies a recording transport saw."""
+    bodies = []
+
+    def record(url, body, headers, timeout_s):
+        bodies.append(body.decode())
+        return 200
+
+    AmplitudeHttpSink("http://example.invalid", "k", transport=record, **caps).send_events(events)
+    prefix, suffix = '{"api_key":"k","events":[', "]}"
+    assert all(b.startswith(prefix) and b.endswith(suffix) for b in bodies)
+    return [b[len(prefix):-len(suffix)].split(",") for b in bodies]
+
+
 def test_amplitude_batcher_event_cap():
-    batches = AmplitudeBatcher(max_events=2, max_bytes=10_000).batch(["a", "b", "c"])
+    batches = amplitude_batches(["a", "b", "c"], max_batch_size=2, max_bytes=10_000)
     assert batches == [["a", "b"], ["c"]]
 
 
 def test_amplitude_batcher_byte_cap():
-    batches = AmplitudeBatcher(max_events=100, max_bytes=4).batch(["aa", "bb", "cc"])
+    batches = amplitude_batches(["aa", "bb", "cc"], max_batch_size=100, max_bytes=4)
     assert batches == [["aa"], ["bb"], ["cc"]]
 
 
@@ -132,6 +146,27 @@ def test_amplitude_413_halves(http_server):
     assert len(http_server["requests"]) == 3
     first = json.loads(http_server["requests"][1])
     assert first["events"] == [{"n": 1}]
+
+
+def test_amplitude_split_413_is_not_a_drop(spark):
+    """A 413 whose halves are both delivered counts as payload-too-large
+    only; a single event answered 413 is the drop."""
+    from telemetry_streaming_spark.observability import SinkMetrics
+
+    metrics = SinkMetrics(spark)
+    codes = iter([413, 200, 200, 413])
+    sink = AmplitudeHttpSink(
+        "http://example.invalid", api_key="k", config=fast_config(max_attempts=1),
+        transport=lambda *a: next(codes), metrics=metrics,
+    )
+    sink.send_events(['{"n":1}', '{"n":2}'])
+    assert metrics.snapshot() == {
+        "success": 2, "error": 0, "retry": 0, "payload_too_large": 1, "dropped": 0,
+    }
+    assert sink.dropped == 0
+
+    sink.send_events(['{"n":3}'])
+    assert metrics.value("dropped") == 1 and sink.dropped == 1
 
 
 def test_dogstatsd_datagram_format():
@@ -171,7 +206,7 @@ def test_push_partitions_rate_limited_batch(spark):
     """K11: repartition(maxParallel) + per-partition sink push; every
     row delivered exactly once through executor-side sinks."""
     from telemetry_streaming_spark.observability import SinkMetrics
-    from telemetry_streaming_spark.sinks.http import HttpSink, push_partitions
+    from telemetry_streaming_spark.sinks import push_partitions
 
     metrics = SinkMetrics(spark)
     df = spark.range(30).selectExpr("concat('row-', id) AS payload", "id % 3 AS k")

@@ -320,6 +320,149 @@ def test_crashes_streaming_to_influx_e2e(spark, stream_dirs, live_http_server):
     assert any("appName=Fennec" in ln and "osName=Android" in ln for ln in delivered)
 
 
+def _run_streaming_job(spark, argv, feed=None, timeout=120):
+    """Run the CLI streaming job ``argv`` in a thread.  With ``feed``,
+    wait for the job's query in ``spark.streams.active``, call
+    ``feed(query)``, then stop the query; without it, wait for the job
+    to end by itself.  Returns what ``main`` raised, or None."""
+    import threading
+
+    from telemetry_streaming_spark.cli import main
+
+    errors = []
+
+    def run():
+        try:
+            main(argv, spark=spark)
+        except Exception as e:
+            errors.append(e)
+
+    def active():
+        return [q for q in spark.streams.active if q.name == argv[0]]
+
+    thread = threading.Thread(target=run, daemon=True)
+    thread.start()
+    deadline = time.time() + timeout
+    if feed is not None:
+        while not active() and thread.is_alive() and time.time() < deadline:
+            time.sleep(0.1)
+        for q in active():
+            try:
+                feed(q)
+            finally:
+                q.stop()
+    thread.join(max(deadline - time.time(), 1))
+    if thread.is_alive():
+        for q in active():
+            q.stop()
+        thread.join(30)
+        pytest.fail(f"{argv[0]} did not finish")
+    return errors[0] if errors else None
+
+
+def _text_rows(spark, path: str) -> list[str]:
+    return [r.value for r in spark.read.text(path).collect()]
+
+
+def test_cli_crashes_to_influx_streaming_url(spark, stream_dirs, live_http_server):
+    """crashes_to_influx --stream-input --url delivers line-protocol
+    bodies through the foreach sink."""
+    from tests.fixtures import crash_ping
+
+    _write_lines(stream_dirs["in"], [crash_ping(), crash_ping()])
+    err = _run_streaming_job(spark, [
+        "crashes_to_influx", "--stream-input", stream_dirs["in"],
+        "--url", live_http_server["url"], "--checkpoint-path", stream_dirs["ckpt"],
+    ], feed=drain)
+    assert err is None
+    delivered = [ln for b in live_http_server["requests"] for ln in b.splitlines() if ln]
+    assert len(delivered) == 2
+    assert all(ln.startswith("crashes,") and f" {TEST_TIMESTAMP_NS}" in ln for ln in delivered)
+
+
+def test_cli_crashes_to_influx_streaming_output_path(spark, stream_dirs):
+    from tests.fixtures import crash_ping
+
+    _write_lines(stream_dirs["in"], [crash_ping()])
+    err = _run_streaming_job(spark, [
+        "crashes_to_influx", "--stream-input", stream_dirs["in"],
+        "--output-path", stream_dirs["out"], "--checkpoint-path", stream_dirs["ckpt"],
+    ], feed=drain)
+    assert err is None
+    lines = _text_rows(spark, stream_dirs["out"])
+    assert len(lines) == 1 and lines[0].startswith("crashes,")
+
+
+def test_cli_events_to_amplitude_streaming_output_path(spark, stream_dirs, tmp_path):
+    from tests.fixtures import focus_event_ping
+    from tests.test_events_to_amplitude import FOCUS_CONFIG
+
+    config = tmp_path / "focus.json"
+    config.write_text(json.dumps(FOCUS_CONFIG))
+    _write_lines(stream_dirs["in"], [focus_event_ping()])
+    err = _run_streaming_job(spark, [
+        "events_to_amplitude", "--stream-input", stream_dirs["in"], "--config", str(config),
+        "--output-path", stream_dirs["out"], "--checkpoint-path", stream_dirs["ckpt"],
+    ], feed=drain)
+    assert err is None
+    events = [json.loads(e) for e in _text_rows(spark, stream_dirs["out"])]
+    assert sorted(e["event_type"] for e in events) == [
+        "m_foc - AppOpen",
+        "m_foc - Erase",
+        "second_event_group - AppClose",
+    ]
+
+
+def test_cli_enrollments_to_testtube_streaming_url(spark, stream_dirs, live_http_server):
+    """enrollments_to_testtube --stream-input delivers a window once the
+    watermark passes it: a ping an hour later, sent twice, moves the
+    watermark (ErrorAggregatorTest.scala:299-324's trick)."""
+    from tests.fixtures import event_ping
+
+    ev = [5, "normandy", "enroll", "preference_study", "ExpA", {"branch": "six"}]
+    later = event_ping(events={"dynamic": [ev]}, meta={"Timestamp": TEST_TIMESTAMP_NS + HOUR_NS})
+    _write_lines(stream_dirs["in"], [event_ping(events={"dynamic": [ev]})])
+
+    def feed(query):
+        drain(query)
+        for _ in range(2):
+            _write_lines(stream_dirs["in"], [later])
+            drain(query)
+
+    err = _run_streaming_job(spark, [
+        "enrollments_to_testtube", "--stream-input", stream_dirs["in"],
+        "--url", live_http_server["url"], "--checkpoint-path", stream_dirs["ckpt"],
+    ], feed=feed)
+    assert err is None
+    bodies = [json.loads(b) for b in live_http_server["requests"]]
+    assert [len(b["enrollment"]) for b in bodies] == [1]
+    row = bodies[0]["enrollment"][0]
+    assert (row["experiment_id"], row["enroll_count"]) == ("ExpA", 1)
+    assert row["window_start"] == 1460036100000  # 2016-04-07 13:35 UTC
+
+
+def test_cli_uptake_to_datadog_streaming_statsd_guard(spark, stream_dirs):
+    """uptake_to_datadog --stream-input --statsd-host --raise-on-error:
+    the parse_guard observation rides the foreach sink's query, so a
+    malformed row still raises."""
+    import socket
+
+    from telemetry_streaming_spark.observability import ParseRejectionError
+
+    _write_lines(stream_dirs["in"], [main_ping(), "not-json"])
+    recv = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+    recv.bind(("127.0.0.1", 0))
+    try:
+        err = _run_streaming_job(spark, [
+            "uptake_to_datadog", "--stream-input", stream_dirs["in"],
+            "--statsd-host", "127.0.0.1", "--statsd-port", str(recv.getsockname()[1]),
+            "--checkpoint-path", stream_dirs["ckpt"], "--raise-on-error",
+        ])
+    finally:
+        recv.close()
+    assert isinstance(err, ParseRejectionError)
+
+
 def test_asof_enrich_streaming_e2e(spark, stream_dirs):
     """Extension: streaming as-of enrichment — events from a file
     stream pick up the dimension version live at their event time via
