@@ -18,13 +18,15 @@ of --input-path exactly like the reference's S3 date partitions).
 Source selection: --kafka-broker (streaming), --stream-input (file
 stream standing in for the topic — the S4 test source), or
 --input-path (batch; --format heka reads the reference's actual wire
-format via sources/heka.py).  The HTTP/UDP-sink jobs
-(enrollments_to_testtube, uptake_to_datadog, crashes_to_*,
-events_to_amplitude) run in both modes through one delivery path:
---url / --statsd-host pushes through the job's ForeachWriter
+format via sources/heka.py).  Every ETL job (error_aggregator through
+events_to_amplitude) builds its output frame and hands it to one
+delivery path, ``_deliver``, which runs it in either mode: --url /
+--statsd-host pushes through the job's ForeachWriter
 (``writeStream.foreach`` when streaming, per partition in batch), and
---output-path is the offline fallback that writes the payload rows to
-files — the same payloads, inspectable.
+--output-path writes files through ``sinks.write_files`` — one
+file per micro-batch appended under --checkpoint-path when streaming
+(K1), an overwrite in batch (K2; the error aggregators write it in
+--num-parquet-files tasks).  A streaming query is named after its job.
 
 ``--explain`` prints the physical plan and exits without executing —
 the plan-review step a 100TB operator runs before launching.
@@ -53,7 +55,6 @@ def _add_common(p: argparse.ArgumentParser, raise_on_error: bool = False) -> Non
     snk = p.add_argument_group("sink")
     snk.add_argument("--output-path")
     snk.add_argument("--checkpoint-path")
-    snk.add_argument("--num-parquet-files", type=int, default=60)
     p.add_argument("--explain", action="store_true", help="print plan, do not run")
     if raise_on_error:
         p.add_argument(
@@ -65,9 +66,9 @@ def _add_common(p: argparse.ArgumentParser, raise_on_error: bool = False) -> Non
         )
 
 
-def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
-    """Build the one-column ``value string`` frame every job consumes.
-    Returns (df, is_streaming)."""
+def _source(spark: SparkSession, args) -> DataFrame:
+    """Build the one-column ``value string`` frame every job consumes;
+    it streams for --kafka-broker and --stream-input."""
     if args.kafka_broker:
         from telemetry_streaming_spark.streaming.core import kafka_source
 
@@ -76,14 +77,14 @@ def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
             starting_offsets=args.starting_offsets,
             fail_on_data_loss=args.fail_on_data_loss,
         )
-        return raw.selectExpr("CAST(value AS STRING) AS value"), True
+        return raw.selectExpr("CAST(value AS STRING) AS value")
     if args.stream_input:
         from telemetry_streaming_spark.streaming.core import text_file_source
 
-        return text_file_source(spark, args.stream_input), True
+        return text_file_source(spark, args.stream_input)
     if not args.input_path:
         raise SystemExit("one of --kafka-broker / --stream-input / --input-path required")
-    paths = [args.input_path]
+    paths = args.input_path
     if args.date_from and args.date_to:
         days = sorted(
             d for d in os.listdir(args.input_path)
@@ -94,12 +95,8 @@ def _source(spark: SparkSession, args) -> tuple[DataFrame, bool]:
     if args.format == "heka":
         from telemetry_streaming_spark.sources.heka import read_heka
 
-        frames = [read_heka(spark, p) for p in paths]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out, False
-    return spark.read.text(paths), False
+        return read_heka(spark, paths)
+    return spark.read.text(paths)
 
 
 def _require(args, *names) -> None:
@@ -150,108 +147,77 @@ def _await_stream_with_reject_guard(spark, start):
 def run_error_aggregator(spark, args, experiments: bool = False):
     from telemetry_streaming_spark.jobs import error_aggregator as job
 
-    raw, streaming = _source(spark, args)
     shape = {}
     if experiments:
         from telemetry_streaming_spark.jobs.experiments_error_aggregator import SHAPE as shape
-    if args.explain:
-        job.aggregate(raw, **shape)[0].explain("formatted")
-        return
-    _require(args, "output-path")
-    if streaming:
-        _require(args, "checkpoint-path")
-
-        def start():
-            return job.write_streaming(raw, args.output_path, args.checkpoint_path, **shape)
-
-        if args.raise_on_error:
-            _await_stream_with_reject_guard(spark, start)
-        else:
-            start().awaitTermination()
-    else:
-        job.write_batch(
-            raw, args.output_path, args.num_parquet_files, args.raise_on_error, **shape
-        )
+    agg, counts = job.aggregate(_source(spark, args), **shape)
+    _deliver(spark, args, agg, partition_by="submission_date_s3",
+             num_files=args.num_parquet_files, counts=counts)
 
 
 def run_event_ping_events(spark, args):
     from telemetry_streaming_spark.jobs import event_ping_events as job
 
-    raw, streaming = _source(spark, args)
-    if args.explain:
-        job.explode_events(raw).explain("formatted")
-        return
-    _require(args, "output-path")
-    if streaming:
-        _require(args, "checkpoint-path")
-        job.write_streaming(raw, args.output_path, args.checkpoint_path).awaitTermination()
-    else:
-        job.explode_events(raw).write.mode("overwrite").parquet(args.output_path)
+    _deliver(spark, args, job.explode_events(_source(spark, args)),
+             partition_by="submission_date_s3")
 
 
 def run_experiment_enrollments(spark, args):
     from telemetry_streaming_spark.jobs import experiment_enrollments as job
 
-    raw, streaming = _source(spark, args)
-    agg = job.aggregate(raw, streaming=streaming)
-    if args.explain:
-        agg.explain("formatted")
-        return
-    _require(args, "output-path")
-    if streaming:
-        _require(args, "checkpoint-path")
-        (
-            agg.writeStream.queryName("main_query").format("parquet")
-            .option("path", args.output_path)
-            .option("checkpointLocation", args.checkpoint_path)
-            .outputMode("append").start().awaitTermination()
-        )
-    else:
-        agg.write.mode("overwrite").parquet(args.output_path)
+    _deliver(spark, args, job.aggregate(_source(spark, args)),
+             partition_by="submission_date_s3")
 
 
-def _run_sink_job(spark, args, df: DataFrame, sink, output_format: str = "text",
-                  counts=None, max_parallel_requests: int | None = None) -> None:
-    """The one delivery path of the HTTP/UDP sink jobs, in batch and
-    streaming.  ``df`` holds the payload rows and ``sink`` is the
-    ForeachWriter (``sinks/__init__.py``) for --url / --statsd-host,
-    or ``None`` to write the rows to --output-path as ``output_format``
-    instead.  Streaming delivers through ``writeStream.foreach(sink)``;
-    batch feeds each partition to a copy of the sink
-    (``push_partitions``).  ``counts`` is the batch ``parse_guard``
-    reader of a --raise-on-error job."""
+def _deliver(spark, args, df: DataFrame, sink=None, output_format: str = "parquet",
+             partition_by: str | None = None, num_files: int | None = None,
+             counts=None, max_parallel_requests: int | None = None, start=None) -> None:
+    """The one delivery path of the ETL jobs, in batch and streaming.
+    ``df`` holds the output rows and ``sink`` is the job's
+    ForeachWriter (``sinks/__init__.py``) for --url / --statsd-host, or
+    ``None`` to write the rows to --output-path as ``output_format``
+    through ``write_files`` (K1/K2, partitioned by ``partition_by``,
+    ``num_files`` tasks in batch).  Streaming delivers through
+    ``writeStream.foreach(sink)`` or the file sink, under the query
+    name of the job; ``start`` replaces both with a job's own query
+    (federated_optimizer's foreachBatch sink).  Batch feeds each
+    partition to a copy of the sink (``push_partitions``).
+    ``counts`` is the batch ``parse_guard`` reader of a
+    --raise-on-error job."""
+    from telemetry_streaming_spark.sinks import push_partitions, write_files
+
     if args.explain:
         df.explain("formatted")
         return
-    if sink is None:
+    if sink is None and start is None:
         _require(args, "output-path")
     raise_on_error = getattr(args, "raise_on_error", False)
     if df.isStreaming:
         _require(args, "checkpoint-path")
 
-        def start():
-            if sink is not None:
-                writer = df.writeStream.foreach(sink)
-            else:
-                writer = df.writeStream.format(output_format).option("path", args.output_path)
+        def start_query():
+            if start is not None:
+                return start()
+            if sink is None:
+                return write_files(df, args.output_path, output_format, partition_by,
+                                   args.checkpoint_path, args.job)
             return (
-                writer.queryName(args.job)
+                df.writeStream.foreach(sink)
+                .queryName(args.job)
                 .option("checkpointLocation", args.checkpoint_path)
                 .outputMode("append")
                 .start()
             )
 
         if raise_on_error:
-            _await_stream_with_reject_guard(spark, start)
+            _await_stream_with_reject_guard(spark, start_query)
         else:
-            start().awaitTermination()
+            start_query().awaitTermination()
         return
     if sink is not None:
-        from telemetry_streaming_spark.sinks import push_partitions
-
         push_partitions(df, lambda: sink, max_parallel_requests=max_parallel_requests)
     else:
-        df.write.mode("overwrite").format(output_format).save(args.output_path)
+        write_files(df, args.output_path, output_format, partition_by, None, args.job, num_files)
     if raise_on_error:
         from telemetry_streaming_spark.observability import ParseRejectionError
 
@@ -266,31 +232,30 @@ def run_enrollments_to_testtube(spark, args):
     from telemetry_streaming_spark.jobs import enrollments_to_testtube as job
     from telemetry_streaming_spark.sinks.http import TestTubeHttpSink
 
-    raw, streaming = _source(spark, args)
     # at most 10 parallel TestTube requests
     # (ExperimentEnrollmentsToTestTube.scala:20, :54)
-    rows = job.to_json_rows(job.aggregate(raw, streaming=streaming)).coalesce(10)
-    _run_sink_job(spark, args, rows, TestTubeHttpSink(args.url) if args.url else None)
+    rows = job.to_json_rows(job.aggregate(_source(spark, args))).coalesce(10)
+    _deliver(spark, args, rows, TestTubeHttpSink(args.url) if args.url else None,
+             output_format="text")
 
 
 def run_uptake_to_datadog(spark, args):
     from telemetry_streaming_spark.jobs import uptake_to_datadog as job
     from telemetry_streaming_spark.sinks.dogstatsd import DogStatsDMetricSink
 
-    raw, _ = _source(spark, args)
-    m, counts = job.metrics(raw)
+    m, counts = job.metrics(_source(spark, args))
     # The reference runs this job as a Kafka->DogStatsD stream
     # (UptakeEventsToDatadog.scala:103-118); parquet is the offline
     # fallback.
     sink = DogStatsDMetricSink(args.statsd_host, args.statsd_port) if args.statsd_host else None
-    _run_sink_job(spark, args, m, sink, output_format="parquet", counts=counts)
+    _deliver(spark, args, m, sink, counts=counts)
 
 
 def run_crashes(spark, args, protocol: str):
     from telemetry_streaming_spark.jobs import crashes as job
     from telemetry_streaming_spark.sinks.http import BatchHttpSink
 
-    raw, _ = _source(spark, args)
+    raw = _source(spark, args)
     if protocol == "influx":
         lines = job.to_influx(raw, measurement_name=args.measurement)
         prefix, sep, suffix = "", "\n", ""
@@ -300,7 +265,8 @@ def run_crashes(spark, args, protocol: str):
     sink = BatchHttpSink(
         args.url, prefix=prefix, sep=sep, suffix=suffix, max_batch_size=args.max_batch_size
     ) if args.url else None
-    _run_sink_job(spark, args, lines, sink, max_parallel_requests=args.max_parallel_requests)
+    _deliver(spark, args, lines, sink, output_format="text",
+             max_parallel_requests=args.max_parallel_requests)
 
 
 def run_events_to_amplitude(spark, args):
@@ -310,29 +276,27 @@ def run_events_to_amplitude(spark, args):
     _require(args, "config")
     config = job.load_config(args.config)
     doctype, app_name = job.dispatch_for_config(config)
-    raw, _ = _source(spark, args)
     payloads = job.amplitude_payloads(
-        raw, config, sample=args.sample, doctype=doctype, app_name=app_name
+        _source(spark, args), config, sample=args.sample, doctype=doctype, app_name=app_name
     )
     events = job.exploded_events(payloads).select("event_json")
     api_key = args.api_key or os.environ.get("AMPLITUDE_API_KEY", "")
-    _run_sink_job(spark, args, events, AmplitudeHttpSink(args.url, api_key) if args.url else None)
+    _deliver(spark, args, events, AmplitudeHttpSink(args.url, api_key) if args.url else None,
+             output_format="text")
 
 
 def run_federated_optimizer(spark, args):
     from telemetry_streaming_spark.jobs import federated_optimizer as job
 
     _require(args, "state-path", "model-output-path", "checkpoint-path")
-    raw, streaming = _source(spark, args)
-    if not streaming:
+    raw = _source(spark, args)
+    if not raw.isStreaming:
         raise SystemExit("federated_optimizer is a streaming-only job")
     updates = job.frecency_updates(raw, model_branch=args.model_branch)
-    agg = job.aggregate_updates(updates, streaming=True)
-    if args.explain:
-        agg.explain("formatted")
-        return
+    agg = job.aggregate_updates(updates)
     sink = job.FederatedOptimizerSink(args.state_path, args.model_output_path)
-    job.write_updates_streaming(agg, sink, args.checkpoint_path).awaitTermination()
+    _deliver(spark, args, agg, start=lambda: job.write_updates_streaming(
+        agg, sink, args.checkpoint_path, query_name=args.job))
 
 
 def run_minhash_index(spark, args):
@@ -1831,9 +1795,12 @@ def build_parser() -> argparse.ArgumentParser:
     top = argparse.ArgumentParser(prog="telemetry_streaming_spark")
     sub = top.add_subparsers(dest="job", required=True)
 
-    for name in ("error_aggregator", "experiments_error_aggregator", "event_ping_events",
-                 "experiment_enrollments"):
-        _add_common(sub.add_parser(name), raise_on_error=name.endswith("error_aggregator"))
+    for name in ("error_aggregator", "experiments_error_aggregator"):
+        p = sub.add_parser(name)
+        _add_common(p, raise_on_error=True)
+        p.add_argument("--num-parquet-files", type=int, default=60)
+    for name in ("event_ping_events", "experiment_enrollments"):
+        _add_common(sub.add_parser(name))
 
     p = sub.add_parser("enrollments_to_testtube")
     _add_common(p)

@@ -14,7 +14,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from telemetry_streaming_spark.jobs.experiment_enrollments import enrollment_events
+from telemetry_streaming_spark.jobs.experiment_enrollments import WINDOW_KEYS, enrollment_events
+from telemetry_streaming_spark.streaming.core import window_aggregate
 
 METHODS = {
     "enroll_count": "enroll",
@@ -27,27 +28,11 @@ METHODS = {
 }
 
 
-def aggregate(raw: DataFrame, streaming: bool = False) -> DataFrame:
-    events = enrollment_events(raw)
-    if streaming:
-        events = events.withWatermark("timestamp", "1 minute")
-    return (
-        events.groupBy(
-            F.window("timestamp", "5 minutes").alias("window"),
-            "object",
-            "experiment_id",
-            "branch_id",
-            "submission_date_s3",
-        )
-        .agg(
-            *[
-                F.count(F.when(F.col("method") == m, 1)).alias(alias)
-                for alias, m in METHODS.items()
-            ]
-        )
-        .withColumn("window_start", F.col("window")["start"])
-        .withColumn("window_end", F.col("window")["end"])
-        .drop("window")
+def aggregate(raw: DataFrame) -> DataFrame:
+    return window_aggregate(
+        enrollment_events(raw),
+        WINDOW_KEYS,
+        [F.count(F.when(F.col("method") == m, 1)).alias(alias) for alias, m in METHODS.items()],
     )
 
 

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 
 from telemetry_streaming_spark.functions import pings as P
 from telemetry_streaming_spark.schemas import COUNT_HISTOGRAM_ERRORS
+from telemetry_streaming_spark.sinks import write_files
+from telemetry_streaming_spark.streaming.core import window_aggregate
 
 ALLOWED_DOC_TYPES = ("main", "crash", "core")
 ALLOWED_APP_NAMES = ("Firefox", "Fennec")
@@ -219,17 +221,12 @@ def _window_aggregate(
     dimensions: list[str] | None,
     stats: list[str] | None,
 ) -> DataFrame:
-    dims = dimensions or DIMENSION_COLUMNS
-    stat_cols = stats or STAT_COLUMNS
-    if streaming:
-        rows = rows.withWatermark("timestamp", "1 minute")
-    return (
-        rows.groupBy(F.window("timestamp", "5 minutes").alias("window"), *dims)
-        .agg(*[F.sum(c).alias(c.lower()) for c in stat_cols])
-        .withColumn("window_start", F.col("window")["start"])
-        .withColumn("window_end", F.col("window")["end"])
-        .drop("window")
-    )
+    """:func:`window_aggregate` with the ErrorAggregator defaults:
+    every stat summed under its lower-cased name.  ``streaming`` is
+    unused — the watermark follows ``rows.isStreaming`` — and stays for
+    positional callers."""
+    aggs = [F.sum(c).alias(c.lower()) for c in stats or STAT_COLUMNS]
+    return window_aggregate(rows, dimensions or DIMENSION_COLUMNS, aggs)
 
 
 def aggregate(
@@ -262,24 +259,16 @@ def write_streaming(
     dimensions: list[str] | None = None,
     stats: list[str] | None = None,
 ):
-    """K1: append-mode date-partitioned parquet, one file per batch
-    (repartition(1), ErrorAggregatorBase.scala:146-154).
+    """K1 (:func:`write_files`): append-mode date-partitioned parquet,
+    one file per batch.
 
     Every micro-batch reports ``observedMetrics["parse_guard"]`` on its
     progress; under --raise-on-error the CLI registers a
     :func:`make_reject_guard_listener` and stops the query when a
     micro-batch reports rejected rows."""
     agg, _ = aggregate(raw, dimensions, stats)
-    return (
-        agg.repartition(1)
-        .writeStream.queryName("main_query")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .partitionBy("submission_date_s3")
-        .outputMode("append")
-        .start()
-    )
+    return write_files(agg, output_path, "parquet", "submission_date_s3", checkpoint_path,
+                       "error_aggregator")
 
 
 def write_batch(
@@ -290,8 +279,8 @@ def write_batch(
     dimensions: list[str] | None = None,
     stats: list[str] | None = None,
 ) -> dict:
-    """K2: dynamic-partition-overwrite parquet
-    (ErrorAggregatorBase.scala:168-173).
+    """K2 (:func:`write_files`): dynamic-partition-overwrite parquet in
+    ``num_files`` tasks.
 
     Returns the ``parse_guard`` counts (``rows_seen``,
     ``rows_rejected``), counted in the same pass as the write.
@@ -301,12 +290,8 @@ def write_batch(
     from telemetry_streaming_spark.observability import ParseRejectionError
 
     agg, counts = aggregate(raw, dimensions, stats)
-    (
-        agg.repartition(num_files)
-        .write.mode("overwrite")
-        .partitionBy("submission_date_s3")
-        .parquet(output_path)
-    )
+    write_files(agg, output_path, "parquet", "submission_date_s3", None, "error_aggregator",
+                num_files)
     seen = counts()
     if raise_on_error and seen["rows_rejected"]:
         raise ParseRejectionError(seen)

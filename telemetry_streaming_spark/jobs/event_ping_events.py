@@ -6,10 +6,11 @@ SPARK-23251 workaround (extras stringified to map<string,string>)
 falling out naturally from the typed event schema.  P29 + P3 + P28.
 
 Scale shape: pure parse -> explode -> project; no shuffle at all
-until the sink (the reference partitions output by submission date +
-docType, K1/K2).  Rows lacking documentId or clientId are dropped via
-the reference's catch-all (meta.documentId.get throw —
-EventPingEvents.scala:128, SURVEY §7.4 note 2).
+until the sink, which partitions the output by ``submission_date_s3``
+in batch and streaming alike (K1/K2, EventPingEvents.scala:67-77).
+Rows lacking documentId or clientId are dropped via the reference's
+catch-all (meta.documentId.get throw — EventPingEvents.scala:128,
+SURVEY §7.4 note 2).
 """
 
 from __future__ import annotations
@@ -83,22 +84,6 @@ def explode_events(raw: DataFrame) -> DataFrame:
         ev["value"].alias("event_string_value"),
         ev["extra"].alias("event_map_values"),
         F.col("pe")["process"].alias("event_process"),
+        P.timestamp_to_date_string(F.timestamp_seconds("timestamp")).alias("submission_date_s3"),
     )
 
-
-def write_streaming(raw: DataFrame, output_path: str, checkpoint_path: str):
-    """K1 variant partitioned by (submission_date_s3, doc_type) —
-    EventPingEvents.scala:67-77."""
-    out = explode_events(raw).withColumn(
-        "submission_date_s3", F.date_format(F.timestamp_seconds(F.col("timestamp")), "yyyyMMdd")
-    )
-    return (
-        out.repartition(1)
-        .writeStream.queryName("event_ping_events")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .partitionBy("submission_date_s3")
-        .outputMode("append")
-        .start()
-    )

@@ -205,10 +205,11 @@ def load_config(path: str) -> AmplitudeConfig:
 # keyword set (required / enum / pattern / minimum, plus type
 # annotations that restate the event struct's natural types) into pure
 # Column expressions — JVM-side, codegen'd, zero Python in the hot
-# path.  Any schema using keywords beyond that set routes to the
-# GENERAL tier: the jsonschema library over Arrow batches, matching
-# the reference's use of a full JSON-schema validator
-# (Ping.scala:354-377; meta-schema EventsToAmplitude.scala:191-206).
+# path.  A config with any schema beyond that set routes whole to the
+# GENERAL tier (_first_match_indices): the jsonschema library over
+# Arrow batches, matching the reference's use of a full JSON-schema
+# validator (Ping.scala:354-377; meta-schema
+# EventsToAmplitude.scala:191-206).
 
 _COMPILED_TOP_KEYWORDS = {"$schema", "type", "properties", "required", "description", "title"}
 _COMPILED_PROP_KEYWORDS = {"enum", "pattern", "minimum", "type", "description", "title"}
@@ -226,9 +227,9 @@ _NATURAL_TYPES = {
 
 # Regex constructs whose semantics (or very compilability) diverge
 # between Java regex — what the compiled tier's rlike/regexp_count
-# executes — and Python `re`, which the general jsonschema tier and
-# _first_match_indices execute.  A `pattern` containing any of these
-# routes the whole schema to the general tier, so BOTH matching paths
+# executes — and Python `re`, which the general tier
+# (_first_match_indices) executes.  A `pattern` containing any of these
+# routes the whole config to the general tier, so BOTH matching paths
 # evaluate it with the same engine and classification cannot depend on
 # which tier a config lands in (the reference validates uniformly via
 # everit, EventsToAmplitude.scala:191-206).  The scan is conservative:
@@ -278,34 +279,6 @@ def schema_is_compiled(schema: dict) -> bool:
     return True
 
 
-def _general_schema_predicate(ev: Column, schema: dict) -> Column:
-    """General JSON-schema tier: serialize the reshaped event struct to
-    a JSON object (null fields omitted, so presence semantics line up
-    with ``required``) and validate with the jsonschema library in an
-    Arrow-batched pandas UDF.  The validator honors the schema's own
-    ``$schema`` draft and is built once per batch, not per row."""
-    from pyspark.sql.functions import pandas_udf
-
-    schema_json = json.dumps(schema)  # closure ships a string, not a dict tree
-
-    # no type hints: PEP-563 stringized annotations (this module's
-    # `from __future__ import annotations`) defeat pandas_udf's hint
-    # inference, so the eval type is declared via functionType instead
-    def _valid(ev_json):
-        import jsonschema
-
-        spec = json.loads(schema_json)
-        validator = jsonschema.validators.validator_for(spec)(spec)
-        return ev_json.map(
-            lambda s: s is not None and validator.is_valid(json.loads(s))
-        )
-
-    from pyspark.sql.functions import PandasUDFType
-
-    valid_udf = pandas_udf(_valid, "boolean", PandasUDFType.SCALAR)
-    return valid_udf(F.to_json(ev))
-
-
 def _first_match_indices(events_col: Column, schemas: list[dict]) -> Column:
     """General-tier matcher over the whole events array: serialize the
     reshaped event structs to a JSON array (null fields omitted, so
@@ -345,25 +318,13 @@ def _first_match_indices(events_col: Column, schemas: list[dict]) -> Column:
 
 
 def event_predicate(ev: Column, schema: dict) -> Column:
-    """One event JSON-schema -> boolean Column over the reshaped event
-    struct.  Compiled tier when the keyword set allows (the whole
-    production config corpus does); jsonschema-over-Arrow otherwise.
-    JSON-schema semantics either way: an absent (null) property passes
-    every constraint unless listed in ``required``.
-
-    Regex-dialect note: the compiled tier evaluates ``pattern`` via
-    Spark's ``rlike`` (Java ``java.util.regex``), while the general
-    tier — and ``_first_match_indices``, which routes EVERY spec
-    through the jsonschema library like the reference's uniform everit
-    validation (Ping.scala:354-377) — evaluates it with Python ``re``.
-    ``schema_is_compiled`` enforces the shared dialect mechanically: a
-    ``pattern`` using a construct the engines disagree on (possessive
-    quantifiers, ``\\p{...}`` classes, char-class intersection,
-    lookbehind/named groups, ``\\Z``-family anchors — see
-    ``_DIALECT_UNSAFE_RE``) routes the schema to the general tier, so
-    classification can never depend on which tier a config lands in."""
-    if not schema_is_compiled(schema):
-        return _general_schema_predicate(ev, schema)
+    """One compiled event JSON-schema (:func:`schema_is_compiled`) ->
+    boolean Column over the reshaped event struct, with JSON-schema
+    semantics: an absent (null) property passes every constraint
+    unless listed in ``required``.  ``pattern`` runs as Spark's
+    ``rlike`` (Java regex); ``schema_is_compiled`` admits only patterns
+    in the dialect Java and Python ``re`` share, so a config classifies
+    the same in this tier and in ``_first_match_indices``."""
     preds: list[Column] = [F.lit(True)]
     for fname in schema.get("required", []):
         preds.append(ev[fname].isNotNull())
@@ -418,28 +379,29 @@ class PingContext:
     user_properties: dict[str, Column]  # merged into user_properties
 
 
+def _settings_bool(s: Column, key: str) -> Column:
+    """The reference's asBool: Some(v) -> v == "true", None -> absent."""
+    return F.when(s[key].isNotNull(), s[key] == "true")
+
+
 def _focus_settings_props(payload: Column) -> dict[str, Column]:
     """FocusSettings prefs (FocusEvent.scala:52-90): pref_* strings,
     boolean-ized where the reference does ``== "true"``."""
     s = payload["settings"]
-
-    def b(key: str) -> Column:
-        return F.when(s[key].isNotNull(), s[key] == "true")
-
     return {
-        "pref_privacy_block_ads": b("pref_privacy_block_ads"),
+        "pref_privacy_block_ads": _settings_bool(s, "pref_privacy_block_ads"),
         "pref_locale": s["pref_locale"],
-        "pref_privacy_block_social": b("pref_privacy_block_social"),
-        "pref_secure": b("pref_secure"),
-        "pref_privacy_block_analytics": b("pref_privacy_block_analytics"),
+        "pref_privacy_block_social": _settings_bool(s, "pref_privacy_block_social"),
+        "pref_secure": _settings_bool(s, "pref_secure"),
+        "pref_privacy_block_analytics": _settings_bool(s, "pref_privacy_block_analytics"),
         "pref_search_engine": s["pref_search_engine"],
-        "pref_privacy_block_other": b("pref_privacy_block_other"),
-        "pref_default_browser": b("pref_default_browser"),
-        "pref_performance_block_webfonts": b("pref_performance_block_webfonts"),
-        "pref_performance_block_images": b("pref_performance_block_images"),
-        "pref_autocomplete_installed": b("pref_autocomplete_installed"),
-        "pref_autocomplete_custom": b("pref_autocomplete_custom"),
-        "pref_key_tips": b("pref_key_tips"),
+        "pref_privacy_block_other": _settings_bool(s, "pref_privacy_block_other"),
+        "pref_default_browser": _settings_bool(s, "pref_default_browser"),
+        "pref_performance_block_webfonts": _settings_bool(s, "pref_performance_block_webfonts"),
+        "pref_performance_block_images": _settings_bool(s, "pref_performance_block_images"),
+        "pref_autocomplete_installed": _settings_bool(s, "pref_autocomplete_installed"),
+        "pref_autocomplete_custom": _settings_bool(s, "pref_autocomplete_custom"),
+        "pref_key_tips": _settings_bool(s, "pref_key_tips"),
     }
 
 
@@ -457,11 +419,6 @@ def focus_context(ping: Column) -> PingContext:
         ping_properties={"device_id": client},
         user_properties=_focus_settings_props(payload),
     )
-
-
-def _settings_bool(s: Column, key: str) -> Column:
-    """The reference's asBool: Some(v) -> v == "true", None -> absent."""
-    return F.when(s[key].isNotNull(), s[key] == "true")
 
 
 def rocket_context(ping: Column) -> PingContext:
@@ -866,43 +823,34 @@ def amplitude_payloads(
     ) & _non_top_level_filter(ctx, config)
     df = df.filter(keep)
 
-    if all(schema_is_compiled(spec.schema) for _, spec in config.flat_specs()):
+    specs = config.flat_specs()
+    if all(schema_is_compiled(spec.schema) for _, spec in specs):
         # Compiled tier: per-event matching runs INSIDE the events
         # array via transform() — no explode, no shuffle, whole ping
         # stays one row end-to-end.
-        matched = F.array_compact(
-            F.transform(events, lambda ev: matched_event_json(ping, ctx, ev, config))
-        )
-        return (
-            df.select(
-                F.coalesce(ctx.client_id, F.lit("")).alias("client_id"),
-                matched.alias("events"),
-            )
-            .filter(F.size("events") > 0)
-        )
+        matched = F.transform(events, lambda ev: matched_event_json(ping, ctx, ev, config))
+    else:
+        # General tier: a pandas UDF cannot run inside a higher-order
+        # lambda, so the per-event jsonschema validation runs OVER THE
+        # WHOLE ARRAY instead — one Arrow batch maps the serialized
+        # events array to the first-matching spec index per event, then
+        # a zip_with picks that spec's serializer column-side.  Pure
+        # map, no explode, no regroup shuffle, so the same plan streams
+        # like the reference's in-stream validator (Ping.scala:354-377).
+        midx = _first_match_indices(events, [spec.schema for _, spec in specs])
 
-    # General tier: a pandas UDF cannot run inside a higher-order
-    # lambda, so the per-event jsonschema validation runs OVER THE
-    # WHOLE ARRAY instead — one Arrow batch maps the serialized events
-    # array to the first-matching spec index per event, then a
-    # zip_with picks that spec's serializer column-side.  Pure map, no
-    # explode, no regroup shuffle, so the same plan streams like the
-    # reference's in-stream validator (Ping.scala:354-377).
-    specs = config.flat_specs()
-    midx = _first_match_indices(events, [spec.schema for _, spec in specs])
+        def _pick(ev: Column, j: Column) -> Column:
+            branches = [
+                F.when(j == F.lit(k), amplitude_event_json(ping, ctx, ev, g, spec))
+                for k, (g, spec) in enumerate(specs)
+            ]
+            return F.coalesce(*branches, F.lit(None).cast("string"))
 
-    def _pick(ev: Column, j: Column) -> Column:
-        branches = [
-            F.when(j == F.lit(k), amplitude_event_json(ping, ctx, ev, g, spec))
-            for k, (g, spec) in enumerate(specs)
-        ]
-        return F.coalesce(*branches, F.lit(None).cast("string"))
-
-    matched = F.array_compact(F.zip_with(events, midx, _pick))
+        matched = F.zip_with(events, midx, _pick)
     return (
         df.select(
             F.coalesce(ctx.client_id, F.lit("")).alias("client_id"),
-            matched.alias("events"),
+            F.array_compact(matched).alias("events"),
         )
         .filter(F.size("events") > 0)
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 
 from telemetry_streaming_spark.functions import events as E
 from telemetry_streaming_spark.functions import pings as P
+from telemetry_streaming_spark.streaming.core import window_aggregate
 
 ALLOWED_DOC_TYPES = ("main", "event")
 
@@ -54,25 +55,17 @@ def enrollment_events(raw: DataFrame) -> DataFrame:
     )
 
 
-def aggregate(raw: DataFrame, streaming: bool = False) -> DataFrame:
+WINDOW_KEYS = ("object", "experiment_id", "branch_id", "submission_date_s3")
+
+
+def aggregate(raw: DataFrame) -> DataFrame:
     """A2: enroll/unenroll conditional counts
     (ExperimentEnrollmentsAggregator.scala:136-147)."""
-    events = enrollment_events(raw)
-    if streaming:
-        events = events.withWatermark("timestamp", "1 minute")
-    return (
-        events.groupBy(
-            F.window("timestamp", "5 minutes").alias("window"),
-            "object",
-            "experiment_id",
-            "branch_id",
-            "submission_date_s3",
-        )
-        .agg(
+    return window_aggregate(
+        enrollment_events(raw),
+        WINDOW_KEYS,
+        [
             F.count(F.when(F.col("method") == "enroll", 1)).alias("enroll_count"),
             F.count(F.when(F.col("method") == "unenroll", 1)).alias("unenroll_count"),
-        )
-        .withColumn("window_start", F.col("window")["start"])
-        .withColumn("window_end", F.col("window")["end"])
-        .drop("window")
+        ],
     )

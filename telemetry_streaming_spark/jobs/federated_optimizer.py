@@ -120,13 +120,10 @@ def frecency_updates(
     )
 
 
-def aggregate_updates(
-    updates: DataFrame,
-    window_offset_min: int = 28,
-    streaming: bool = False,
-) -> DataFrame:
-    """A3-A5 (FederatedLearningSearchOptimizer.scala:94-105)."""
-    if streaming:
+def aggregate_updates(updates: DataFrame, window_offset_min: int = 28) -> DataFrame:
+    """A3-A5 (FederatedLearningSearchOptimizer.scala:94-105); streaming
+    input adds the 0-minute watermark (W2)."""
+    if updates.isStreaming:
         updates = updates.withWatermark("ts", "0 minutes")
     return (
         updates.groupBy(

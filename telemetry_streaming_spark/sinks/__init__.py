@@ -3,7 +3,8 @@
 ``close(error)`` — so one writer object serves both modes.  Streaming
 hands it to ``writeStream.foreach(sink)``; batch feeds each partition
 through :func:`write_partition`, the batch analog of the foreach sink
-(SURVEY §3.2 step 5).
+(SURVEY §3.2 step 5).  File output (K1/K2) has one shape too:
+:func:`write_files`.
 """
 
 from __future__ import annotations
@@ -59,3 +60,35 @@ def push_partitions(
             time.sleep(min_delay_ms / 1000)
 
     df.foreachPartition(run)
+
+
+def write_files(
+    df,
+    path: str,
+    fmt: str,
+    partition_by: str | None,
+    checkpoint_path: str | None,
+    query_name: str,
+    num_files: int | None = None,
+):
+    """The one file sink, K1/K2 (ErrorAggregatorBase.scala:146-173).
+    Streaming (K1): ``repartition(1)`` — one file per micro-batch and
+    partition — appended under ``checkpoint_path``; returns the started
+    query, named ``query_name``.  Batch (K2): optionally
+    ``repartition(num_files)``, then overwrite; the session's dynamic
+    partition overwrite replaces only the partitions written."""
+    partitions = [partition_by] if partition_by else []
+    if df.isStreaming:
+        return (
+            df.repartition(1)
+            .writeStream.queryName(query_name)
+            .format(fmt)
+            .option("path", path)
+            .option("checkpointLocation", checkpoint_path)
+            .partitionBy(*partitions)
+            .outputMode("append")
+            .start()
+        )
+    if num_files:
+        df = df.repartition(num_files)
+    df.write.mode("overwrite").partitionBy(*partitions).format(fmt).save(path)

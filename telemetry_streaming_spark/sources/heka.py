@@ -356,11 +356,12 @@ def heka_file_to_json_lines(
 
 def read_heka(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     json_fields: tuple[str, ...] = DEFAULT_JSON_FIELDS,
 ) -> DataFrame:
-    """Heka files -> DataFrame[value: string] of engine JSON envelopes
-    (drop-in for the JSON line sources every job already consumes).
+    """Heka files under ``path`` (one path or a list, e.g. one per day)
+    -> DataFrame[value: string] of engine JSON envelopes (drop-in for
+    the JSON line sources every job already consumes).
 
     ``binaryFile`` scan: one task per file — a day-partitioned S3
     layout parallelizes across the cluster; the protobuf decode is

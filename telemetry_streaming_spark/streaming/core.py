@@ -9,6 +9,8 @@ centralizes the stream-side wiring our jobs share:
   that yields the same one-column ``value string`` contract for
   offline/e2e tests (S4 stand-in — PySpark cannot feed MemoryStream).
 - checkpoint-path convention (W7 — StreamingJobBase.scala:73-77).
+- the one windowed aggregate (W1/W3): 5-minute tumbling windows under
+  a 1-minute watermark when the input streams.
 - a progress-collecting StreamingQueryListener (W11 —
   ErrorAggregatorTest.scala:290-328 drives sends off onQueryProgress;
   our tests assert watermark/row progress the same way).
@@ -26,7 +28,8 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 DEFAULT_CHECKPOINT_ROOT = "/tmp/checkpoints"
@@ -77,6 +80,25 @@ def text_file_source(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
+
+
+def window_aggregate(rows: DataFrame, keys: list, aggs: list[Column]) -> DataFrame:
+    """W3/W1: ``aggs`` per (5-minute tumbling window over
+    ``timestamp``, ``keys``), the window emitted as ``window_start``/
+    ``window_end``.  Streaming input adds the 1-minute watermark that
+    bounds the state and lets append mode emit a window once it closes
+    (ErrorAggregatorBase.scala:238-256,
+    ExperimentEnrollmentsAggregator.scala:56-65).  Batch and streaming
+    return the same schema."""
+    if rows.isStreaming:
+        rows = rows.withWatermark("timestamp", "1 minute")
+    return (
+        rows.groupBy(F.window("timestamp", "5 minutes").alias("window"), *keys)
+        .agg(*aggs)
+        .withColumn("window_start", F.col("window")["start"])
+        .withColumn("window_end", F.col("window")["end"])
+        .drop("window")
+    )
 
 
 class CollectingListener(StreamingQueryListener):

@@ -126,7 +126,7 @@ def test_heka_format_source(spark, tmp_path):
 
 
 @pytest.mark.full  # r11: >=5s; fast-tier siblings cover this surface
-def test_explain_wires_every_job(spark, tmp_path):
+def test_explain_wires_every_job(spark, tmp_path, capsys):
     """--explain must build each job's full plan (catching wiring bugs
     like wrong transform signatures) without executing anything."""
     src = tmp_path / "in"
@@ -140,18 +140,15 @@ def test_explain_wires_every_job(spark, tmp_path):
 
     config = tmp_path / "focus.json"
     config.write_text(json.dumps(FOCUS_CONFIG))
-    sink_jobs = [
+    etl_jobs = [
+        ["error_aggregator"], ["experiments_error_aggregator"],
+        ["event_ping_events"], ["experiment_enrollments"],
         ["enrollments_to_testtube"], ["uptake_to_datadog"],
         ["crashes_to_influx"], ["crashes_to_opentsdb"],
         ["events_to_amplitude", "--config", str(config)],
     ]
-    batch_jobs = [
-        ["error_aggregator"], ["experiments_error_aggregator"],
-        ["event_ping_events"], ["experiment_enrollments"],
-    ] + sink_jobs
-    for job in batch_jobs:
+    for job in etl_jobs:
         main(job + ["--input-path", str(src), "--explain"], spark=spark)
-    for job in sink_jobs:
         main(job + ["--stream-input", str(stream), "--explain"], spark=spark)
     main([
         "federated_optimizer", "--stream-input", str(stream),
@@ -160,6 +157,25 @@ def test_explain_wires_every_job(spark, tmp_path):
         "--checkpoint-path", str(tmp_path / "ck"),
         "--explain",
     ], spark=spark)
+    assert capsys.readouterr().out.count("== Physical Plan ==") == 2 * len(etl_jobs) + 1
+
+
+def test_event_ping_events_batch_is_date_partitioned(spark, tmp_path):
+    """Batch output carries submission_date_s3 and is partitioned by
+    it, like the streaming sink (EventPingEvents.scala:67-77)."""
+    from tests.fixtures import event_ping
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "pings.jsonl").write_text(event_ping() + "\n")
+    out = tmp_path / "out"
+    main(["event_ping_events", "--input-path", str(src), "--output-path", str(out)],
+         spark=spark)
+    assert [d for d in os.listdir(out) if not d.startswith(("_", "."))] == [
+        "submission_date_s3=20160407"
+    ]
+    got = spark.read.parquet(str(out)).collect()
+    assert len(got) == 4 and {str(r.submission_date_s3) for r in got} == {"20160407"}
 
 
 @pytest.mark.full  # r11: >=5s; fast-tier siblings cover this surface
@@ -274,6 +290,22 @@ def test_raise_on_error_only_on_guarded_jobs():
     assert guarded == {"error_aggregator", "experiments_error_aggregator", "uptake_to_datadog"}
     with pytest.raises(SystemExit):
         main(["events_to_amplitude", "--input-path", "/x", "--raise-on-error"])
+
+
+def test_num_parquet_files_only_on_error_aggregators():
+    """Of the ETL jobs only the error aggregators read
+    --num-parquet-files; elsewhere it is an unknown option."""
+    sub = next(a for a in build_parser()._actions if a.dest == "job")
+    etl = ["error_aggregator", "experiments_error_aggregator", "event_ping_events",
+           "experiment_enrollments", "enrollments_to_testtube", "uptake_to_datadog",
+           "crashes_to_influx", "crashes_to_opentsdb", "events_to_amplitude",
+           "federated_optimizer"]
+    assert {
+        name for name in etl
+        if any("--num-parquet-files" in a.option_strings for a in sub.choices[name]._actions)
+    } == {"error_aggregator", "experiments_error_aggregator"}
+    with pytest.raises(SystemExit):
+        main(["event_ping_events", "--input-path", "/x", "--num-parquet-files", "2"])
 
 
 def test_raise_on_error_batch_clean_input_passes(spark, tmp_path):

@@ -16,6 +16,7 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
@@ -413,22 +414,44 @@ def test_cli_events_to_amplitude_streaming_output_path(spark, stream_dirs, tmp_p
     ]
 
 
-def test_cli_enrollments_to_testtube_streaming_url(spark, stream_dirs, live_http_server):
-    """enrollments_to_testtube --stream-input delivers a window once the
-    watermark passes it: a ping an hour later, sent twice, moves the
-    watermark (ErrorAggregatorTest.scala:299-324's trick)."""
+def _files_per_batch(out: str) -> list[list[str]]:
+    """The files the file sink committed in each micro-batch, read from
+    its ``_spark_metadata`` log (one entry per batch)."""
+    log = os.path.join(out, "_spark_metadata")
+    batches = []
+    for name in sorted((n for n in os.listdir(log) if n.isdigit()), key=int):
+        with open(os.path.join(log, name)) as f:
+            entries = f.read().splitlines()[1:]  # after the "v1" header
+        batches.append([os.path.relpath(urlparse(json.loads(e)["path"]).path, out)
+                        for e in entries])
+    return batches
+
+
+def _enrollment_double_send(dir_path: str):
+    """Writes one normandy-enroll event ping (ExpA, branch six) and
+    returns the feed of the reference's double-send trick
+    (ErrorAggregatorTest.scala:299-324): the same ping an hour later,
+    sent twice, moves the watermark past the first window."""
     from tests.fixtures import event_ping
 
     ev = [5, "normandy", "enroll", "preference_study", "ExpA", {"branch": "six"}]
     later = event_ping(events={"dynamic": [ev]}, meta={"Timestamp": TEST_TIMESTAMP_NS + HOUR_NS})
-    _write_lines(stream_dirs["in"], [event_ping(events={"dynamic": [ev]})])
+    _write_lines(dir_path, [event_ping(events={"dynamic": [ev]})])
 
     def feed(query):
         drain(query)
         for _ in range(2):
-            _write_lines(stream_dirs["in"], [later])
+            _write_lines(dir_path, [later])
             drain(query)
 
+    return feed
+
+
+def test_cli_enrollments_to_testtube_streaming_url(spark, stream_dirs, live_http_server):
+    """enrollments_to_testtube --stream-input delivers a window once the
+    watermark passes it: a ping an hour later, sent twice, moves the
+    watermark (ErrorAggregatorTest.scala:299-324's trick)."""
+    feed = _enrollment_double_send(stream_dirs["in"])
     err = _run_streaming_job(spark, [
         "enrollments_to_testtube", "--stream-input", stream_dirs["in"],
         "--url", live_http_server["url"], "--checkpoint-path", stream_dirs["ckpt"],
@@ -439,6 +462,29 @@ def test_cli_enrollments_to_testtube_streaming_url(spark, stream_dirs, live_http
     row = bodies[0]["enrollment"][0]
     assert (row["experiment_id"], row["enroll_count"]) == ("ExpA", 1)
     assert row["window_start"] == 1460036100000  # 2016-04-07 13:35 UTC
+
+
+@pytest.mark.parametrize("job", ["event_ping_events", "experiment_enrollments"])
+def test_cli_parquet_job_streaming_layout(spark, stream_dirs, job):
+    """The parquet ETL jobs stream through the K1 sink: date-partitioned
+    output, one parquet file per micro-batch that emits rows."""
+    feed = _enrollment_double_send(stream_dirs["in"])
+    err = _run_streaming_job(spark, [
+        job, "--stream-input", stream_dirs["in"],
+        "--output-path", stream_dirs["out"], "--checkpoint-path", stream_dirs["ckpt"],
+    ], feed=feed)
+    assert err is None
+    written = [b for b in _files_per_batch(stream_dirs["out"]) if b]
+    assert all(len(b) == 1 for b in written)
+    assert all(b[0].startswith("submission_date_s3=20160407/") for b in written)
+    got = spark.read.parquet(stream_dirs["out"]).collect()
+    if job == "event_ping_events":
+        # stateless: every input file is its own data micro-batch
+        assert len(written) == 3 and len(got) == 3
+    else:
+        # only the first window has closed
+        assert len(written) == 1
+        assert [(r.experiment_id, r.enroll_count) for r in got] == [("ExpA", 1)]
 
 
 def test_cli_uptake_to_datadog_streaming_statsd_guard(spark, stream_dirs):
