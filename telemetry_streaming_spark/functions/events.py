@@ -89,5 +89,6 @@ def experiments_map(ping: Column) -> Column:
 
 
 def filter_events_by_category(events: Column, categories: tuple[str, ...]) -> Column:
-    """P22: category allow-list over a reshaped event array."""
+    """P22: category allow-list over a process-tagged event array
+    (``main_ping_events`` / ``event_ping_events``)."""
     return F.filter(events, lambda ev: ev["event"]["category"].isin(*categories))

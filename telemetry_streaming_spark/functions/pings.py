@@ -224,21 +224,6 @@ def count_keyed_histogram_value(payload: Column, name: str, key: str) -> Column:
     return payload["keyedHistograms"][name][key]["values"]["0"].cast("int")
 
 
-def histogram_threshold_count(payload: Column, name: str, threshold: int, process: str) -> Column:
-    """Sum of values[k] for numeric keys k >= threshold
-    (MainPing.scala:44-62).  `main` reads payload.histograms; other
-    process types would read processes[p].histograms (not modeled in
-    the envelope: the reference's own tests only exercise `main`)."""
-    values = payload["histograms"][name]["values"]
-    entries = F.map_entries(values)
-    hits = F.filter(
-        entries,
-        lambda e: e["key"].cast("int").isNotNull() & (e["key"].cast("int") >= threshold),
-    )
-    total = F.aggregate(hits, F.lit(0).cast("bigint"), lambda acc, e: acc + e["value"])
-    return F.coalesce(total, F.lit(0).cast("bigint"))
-
-
 def scalar_value(payload: Column, process: str, name: str) -> Column:
     """processes[p].scalars[name] (MainPing.scala:64-69)."""
     return payload["processes"][process]["scalars"][name]
@@ -283,17 +268,6 @@ def search_count(payload: Column) -> Column:
 
 
 # --- P16: session accessors (MainPing.scala:107-189)
-def is_first_subsession(payload: Column) -> Column:
-    return payload["info"]["subsessionCounter"] == 1
-
-
-def first_paint(payload: Column) -> Column:
-    """firstPaint only when reported by the first subsession."""
-    return F.when(
-        is_first_subsession(payload), payload["simpleMeasurements"]["firstPaint"].cast("int")
-    )
-
-
 def active_ticks(payload: Column) -> Column:
     """Scalar browser.engagement.active_ticks preferred over the
     simpleMeasurement (bug 1482924, MainPing.scala:121-129)."""
@@ -301,11 +275,3 @@ def active_ticks(payload: Column) -> Column:
         scalar_value(payload, "parent", "browser.engagement.active_ticks"),
         payload["simpleMeasurements"]["activeTicks"],
     )
-
-
-# --- P17: client sampling (Ping.scala:382-393)
-def include_ping(sample_id: Column, sample: float) -> Column:
-    """Keep iff sampleId < sample*100 (sample truncated to hundredths);
-    missing sampleId -> keep."""
-    truncated = int(sample * 100) / 100
-    return sample_id.isNull() | (sample_id < truncated * 100)

@@ -16,6 +16,8 @@ a pandas UDF plugs the real library in with no other changes.
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -74,8 +76,10 @@ def crash_signature_udf(signature_fn=None):
 
 
 def _crash_tags(
-    ping: Column, signature: Column | None
+    ping: Column, signature: Column | None, escape
 ) -> list[tuple[str, Column]]:
+    """The fixed-order tags; ``escape`` encodes a caller's raw
+    ``signature`` for the target format where it enters the tags."""
     meta = ping["meta"]
     env = ping["environment"]
     build_id = P.normalized_build_id(env["build"]["buildId"], meta["submissionDate"])
@@ -92,7 +96,7 @@ def _crash_tags(
         ("buildIdTag", F.coalesce(build_id, meta["appBuildId"])),
     ]
     if signature is not None:
-        pairs.append(("crashSignature", signature))
+        pairs.append(("crashSignature", escape(signature)))
     return pairs
 
 
@@ -117,7 +121,8 @@ def to_influx(
     signature: Column | None = None,
 ) -> DataFrame:
     """Line protocol: ``measurement,k=v,... buildId=<id> <ts_ns>``
-    with empty-valued tags dropped (CrashesToInflux.scala:13-22)."""
+    with empty-valued tags dropped (CrashesToInflux.scala:13-22).  A raw
+    ``signature`` is escaped by :func:`influx_escape_signature`."""
     df = _filtered_crashes(raw, channels, app_names)
     ping = F.col("ping")
     meta = ping["meta"]
@@ -129,7 +134,7 @@ def to_influx(
         F.when(
             col.isNotNull() & (col != ""), F.concat(F.lit(f",{name}="), col)
         ).otherwise(F.lit(""))
-        for name, col in _crash_tags(ping, signature)
+        for name, col in _crash_tags(ping, signature, influx_escape_signature)
     ]
     line = F.concat(
         F.lit(measurement_name),
@@ -150,7 +155,8 @@ def to_opentsdb(
     signature: Column | None = None,
 ) -> DataFrame:
     """OpenTSDB JSON: {metric, timestamp(ms), value=buildId, tags}
-    (CrashesToOpenTsdb.scala:13-30); timestamp = ns / 1e6."""
+    (CrashesToOpenTsdb.scala:13-30); timestamp = ns / 1e6.  A raw
+    ``signature`` is sanitized by :func:`opentsdb_sanitize_signature`."""
     df = _filtered_crashes(raw, channels, app_names)
     ping = F.col("ping")
     meta = ping["meta"]
@@ -158,13 +164,11 @@ def to_opentsdb(
         P.normalized_build_id(ping["environment"]["build"]["buildId"], meta["submissionDate"]),
         meta["appBuildId"],
     )
-    non_empty = [
-        (name, col) for name, col in _crash_tags(ping, signature)
-    ]
+    pairs = _crash_tags(ping, signature, opentsdb_sanitize_signature)
     tags = F.map_filter(
         F.map_from_arrays(
-            F.array(*[F.lit(n) for n, _ in non_empty]),
-            F.array(*[c for _, c in non_empty]),
+            F.array(*[F.lit(n) for n, _ in pairs]),
+            F.array(*[c for _, c in pairs]),
         ),
         lambda _, v: v.isNotNull() & (v != ""),
     )
@@ -184,7 +188,7 @@ def influx_escape_signature(sig: Column) -> Column:
     escaped (CrashesToInflux.scala:28-34)."""
     out = sig
     for ch, repl in ((" ", r"\\ "), (",", r"\\,"), ("=", r"\\="), ('"', r"\\\"")):
-        out = F.regexp_replace(out, re_escape(ch), repl)
+        out = F.regexp_replace(out, re.escape(ch), repl)
     return out
 
 
@@ -195,9 +199,3 @@ def opentsdb_sanitize_signature(sig: Column) -> Column:
     out = F.replace(out, F.lit("::"), F.lit("-"))
     out = F.replace(out, F.lit(" "), F.lit("_"))
     return F.regexp_replace(out, "[^a-zA-Z0-9_./-]", "/")
-
-
-def re_escape(ch: str) -> str:
-    import re
-
-    return re.escape(ch)

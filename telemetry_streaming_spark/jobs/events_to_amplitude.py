@@ -11,9 +11,12 @@ Ping.scala:300-473) Spark-first:
   JSON-schema validator per event per schema inside a flatMap closure
   (Ping.scala:354-377): opaque to Catalyst and ~100x slower per row.
 * First-match-wins across (eventGroup x event) specs
-  (Ping.scala:365-370 ``.filter(_._1) ... .head``) becomes
-  ``coalesce(when(pred_i, json_i) ...)`` — evaluated lazily left to
-  right, exactly first-match.
+  (Ping.scala:365-370 ``.filter(_._1) ... .head``) becomes one spec
+  index per event, -1 for no match: ``coalesce(when(pred_i, i) ...,
+  -1)`` on the compiled tier, the jsonschema UDF on the general tier.
+  One ``to_json`` per event (``amplitude_event_json``) then picks every
+  spec-dependent part by that index, so the plan does not grow with
+  the number of specs.
 * Top-level filters (EventsToAmplitude.scala:150-166) are plain
   ``filter`` on meta columns, so at 100 TB they push down to the scan
   (partition pruning on docType/appName/submissionDate layouts).
@@ -37,7 +40,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from telemetry_streaming_spark.functions.events import reshape_events
+from telemetry_streaming_spark.functions.events import mobile_ping_events, reshape_events
 from telemetry_streaming_spark.functions.pings import (
     active_ticks,
     parse_pings,
@@ -209,7 +212,9 @@ def load_config(path: str) -> AmplitudeConfig:
 # GENERAL tier (_first_match_indices): the jsonschema library over
 # Arrow batches, matching the reference's use of a full JSON-schema
 # validator (Ping.scala:354-377; meta-schema
-# EventsToAmplitude.scala:191-206).
+# EventsToAmplitude.scala:191-206).  Either tier only yields the index
+# of the first matching spec per event; amplitude_event_json is the one
+# serializer both share.
 
 _COMPILED_TOP_KEYWORDS = {"$schema", "type", "properties", "required", "description", "title"}
 _COMPILED_PROP_KEYWORDS = {"enum", "pattern", "minimum", "type", "description", "title"}
@@ -354,12 +359,6 @@ def get_field(ev: Column, field: str) -> Column:
     if field.startswith("literal."):
         return F.lit(field[len("literal.") :])
     return F.lit("")
-
-
-def _properties_struct(ev: Column, props: dict[str, str]) -> Column:
-    if not props:
-        return F.named_struct()  # empty object -> {}
-    return F.struct(*[get_field(ev, v).alias(k) for k, v in props.items()])
 
 
 # --- per-doctype ping-level context --------------------------------------
@@ -661,39 +660,81 @@ def main_ping_context(ping: Column, events: Column) -> PingContext:
 # --- event -> Amplitude JSON (P20) ---------------------------------------
 
 
-def amplitude_event_json(
-    ping: Column, ctx: PingContext, ev: Column, group_name: str, spec: EventSpec
+def _by_spec(ev: Column, j: Column, refs: dict[int, str]) -> Column:
+    """``CASE j``: ``get_field(ev, refs[j])``, null for a spec index not
+    in ``refs``."""
+    branches = [(j == i, get_field(ev, ref)) for i, ref in refs.items()]
+    return reduce(lambda c, b: c.when(*b), branches[1:], F.when(*branches[0]))
+
+
+def _spec_struct(
+    ev: Column, j: Column, per_spec: list[dict[str, str]], base: dict[str, Column]
 ) -> Column:
-    """One matched event -> compact Amplitude JSON string
-    (eventToAmplitudeEvent, Ping.scala:329-352)."""
+    """A struct that, at spec index ``j``, serializes as ``base``
+    updated with ``per_spec[j]``: same keys, order and types.  Each key
+    is a slot, null for the specs that lack it (``to_json`` omits
+    nulls).  Specs share a slot while their key orders agree; a key
+    that shadows a ``base`` key gets its own slot right after the base
+    one, which is null for the shadowing specs, so no slot mixes
+    types."""
+    fields = []
+    for k, c in base.items():
+        shadow = {i: props[k] for i, props in enumerate(per_spec) if k in props}
+        if shadow:
+            fields += [F.when(~j.isin(*shadow), c).alias(k), _by_spec(ev, j, shadow).alias(k)]
+        else:
+            fields.append(c.alias(k))
+    slots: list[tuple[str, dict[int, str]]] = []
+    for i, props in enumerate(per_spec):
+        at = 0
+        for k, ref in props.items():
+            if k in base:
+                continue
+            at = next((n for n in range(at, len(slots)) if slots[n][0] == k), len(slots))
+            if at == len(slots):
+                slots.append((k, {}))
+            slots[at][1][i] = ref
+            at += 1
+    fields += [_by_spec(ev, j, refs).alias(k) for k, refs in slots]
+    return F.struct(*fields)
+
+
+def amplitude_event_json(
+    ping: Column, ctx: PingContext, ev: Column, j: Column, specs: list[tuple[str, EventSpec]]
+) -> Column:
+    """One event matched by the spec at index ``j`` of ``specs`` ->
+    compact Amplitude JSON string (eventToAmplitudeEvent,
+    Ping.scala:329-352).  One ``to_json`` serves every spec: the
+    spec-dependent parts (event_type, the name in insert_id, the
+    session offset, event and user properties) are picked by ``j``."""
     meta = ping["meta"]
+    names = F.array(*[F.lit(spec.name) for _, spec in specs])
+    event_types = F.array(*[F.lit(f"{g} - {spec.name}") for g, spec in specs])
+    offsets = {i: s.session_id_offset for i, (_, s) in enumerate(specs) if s.session_id_offset}
     offset = (
-        F.coalesce(get_field(ev, spec.session_id_offset).cast("bigint"), F.lit(0))
-        if spec.session_id_offset
-        else F.lit(0)
+        F.coalesce(_by_spec(ev, j, offsets).cast("bigint"), F.lit(0)) if offsets else F.lit(0)
     )
     insert_id = F.concat_ws(
         "-",
         F.coalesce(ctx.client_id, F.lit("None")),
         ctx.session_start.cast("string"),
-        F.lit(spec.name),
+        names[j],
         ev["timestamp"].cast("string"),
         ev["category"],
         ev["method"],
         ev["object"],
     )
-    user_props = dict(ctx.user_properties)
-    for k, v in spec.user_properties.items():
-        user_props[k] = get_field(ev, v)
     fields = dict(ctx.ping_properties)
     fields.update(
         {
             "session_id": (ctx.session_start + offset).cast("bigint"),
             "insert_id": insert_id,
-            "event_type": F.lit(f"{group_name} - {spec.name}"),
+            "event_type": event_types[j],
             "time": (ev["timestamp"].cast("bigint") + ctx.session_start).cast("bigint"),
-            "event_properties": _properties_struct(ev, spec.amplitude_properties),
-            "user_properties": F.struct(*[c.alias(k) for k, c in user_props.items()]),
+            "event_properties": _spec_struct(ev, j, [s.amplitude_properties for _, s in specs], {}),
+            "user_properties": _spec_struct(
+                ev, j, [s.user_properties for _, s in specs], ctx.user_properties
+            ),
             "app_version": meta["appVersion"],
             "os_name": ctx.os_name,
             "os_version": ctx.os_version,
@@ -704,36 +745,13 @@ def amplitude_event_json(
     return F.to_json(F.struct(*[c.alias(k) for k, c in fields.items()]))
 
 
-def matched_event_json(ping: Column, ctx: PingContext, ev: Column, config: AmplitudeConfig) -> Column:
-    """First-match-wins across all (group, spec) pairs; null when no
-    schema matches (event dropped — Ping.scala:365-372)."""
-    branches = [
-        F.when(event_predicate(ev, spec.schema), amplitude_event_json(ping, ctx, ev, g, spec))
-        for g, spec in config.flat_specs()
-    ]
-    return F.coalesce(*branches, F.lit(None))
-
-
 # --- the job -------------------------------------------------------------
-
-_META_FILTER_FIELDS = {
-    "docType",
-    "appName",
-    "appVersion",
-    "appBuildId",
-    "appUpdateChannel",
-    "clientId",
-    "geoCity",
-    "geoCountry",
-    "normalizedChannel",
-    "submissionDate",
-}
 
 
 def _top_level_filter(ping: Column, config: AmplitudeConfig) -> Column:
     pred = F.lit(True)
     for name, allowed in config.top_level_filters.items():
-        if name in _META_FILTER_FIELDS:
+        if name in TOP_LEVEL_PING_FIELDS["telemetry"]:  # the meta fields
             pred = pred & F.coalesce(ping["meta"][name], F.lit("")).isin(*allowed)
     return pred
 
@@ -798,7 +816,7 @@ def amplitude_payloads(
     df = df.filter(_top_level_filter(ping, config))
 
     if doctype in ("focus-event", "mobile-event"):
-        events = reshape_events(ping["payload"]["mobileEvents"])
+        events = mobile_ping_events(ping["payload"])
         ctx = context_for(doctype, app_name)(ping)
     elif doctype == "event":
         # payload.events[process] map, all processes (EventPing.scala:17-21)
@@ -828,35 +846,36 @@ def amplitude_payloads(
         # Compiled tier: per-event matching runs INSIDE the events
         # array via transform() — no explode, no shuffle, whole ping
         # stays one row end-to-end.
-        matched = F.transform(events, lambda ev: matched_event_json(ping, ctx, ev, config))
+        idx = F.transform(
+            events,
+            lambda ev: F.coalesce(
+                *[F.when(event_predicate(ev, s.schema), i) for i, (_, s) in enumerate(specs)],
+                F.lit(-1),
+            ),
+        )
     else:
         # General tier: a pandas UDF cannot run inside a higher-order
-        # lambda, so the per-event jsonschema validation runs OVER THE
-        # WHOLE ARRAY instead — one Arrow batch maps the serialized
-        # events array to the first-matching spec index per event, then
-        # a zip_with picks that spec's serializer column-side.  Pure
-        # map, no explode, no regroup shuffle, so the same plan streams
-        # like the reference's in-stream validator (Ping.scala:354-377).
-        midx = _first_match_indices(events, [spec.schema for _, spec in specs])
-
-        def _pick(ev: Column, j: Column) -> Column:
-            branches = [
-                F.when(j == F.lit(k), amplitude_event_json(ping, ctx, ev, g, spec))
-                for k, (g, spec) in enumerate(specs)
-            ]
-            return F.coalesce(*branches, F.lit(None).cast("string"))
-
-        matched = F.zip_with(events, midx, _pick)
-    return (
-        df.select(
-            F.coalesce(ctx.client_id, F.lit("")).alias("client_id"),
-            F.array_compact(matched).alias("events"),
-        )
-        .filter(F.size("events") > 0)
+        # lambda, so the jsonschema validation maps the WHOLE events
+        # array to its spec indices, one Arrow batch at a time.  Pure
+        # map, no explode, no shuffle: the plan streams like the
+        # reference's in-stream validator (Ping.scala:354-377).
+        idx = _first_match_indices(events, [spec.schema for _, spec in specs])
+    # Both tiers meet here: one serializer per event, picked by index.
+    # The ping filter reads the index, never the serialized array, so
+    # pushing it down copies no serializer.
+    matched = F.zip_with(
+        events, idx, lambda ev, j: F.when(j >= 0, amplitude_event_json(ping, ctx, ev, j, specs))
+    )
+    return df.filter(F.exists(idx, lambda j: j >= 0)).select(
+        F.coalesce(ctx.client_id, F.lit("")).alias("client_id"),
+        F.array_compact(matched).alias("events"),
     )
 
 
 def exploded_events(payloads: DataFrame) -> DataFrame:
     """One row per Amplitude event JSON string — convenient for tests
     and for the oracle harness."""
-    return payloads.select("client_id", F.explode("events").alias("event_json"))
+    # explode_outer: every events array is non-empty, and plain explode
+    # would infer a size(events) > 0 filter that copies the serializer
+    # below the projection.
+    return payloads.select("client_id", F.explode_outer("events").alias("event_json"))

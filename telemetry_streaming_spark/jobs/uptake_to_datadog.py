@@ -27,13 +27,9 @@ def _uptake_events(ping) -> Column:
     payload = ping["payload"]
     main_events = E.main_ping_events(payload, processes=("dynamic",))
     event_events = E.event_ping_events(payload)
-    events = F.when(meta["docType"] == "main", main_events).otherwise(event_events)
-    allowed = F.when(meta["docType"] == "main", F.array(F.lit("normandy"))).otherwise(
-        F.array(*[F.lit(c) for c in UPTAKE_CATEGORIES])
-    )
-    return F.filter(
-        events, lambda pe: F.array_contains(allowed, pe["event"]["category"])
-    )
+    return F.when(
+        meta["docType"] == "main", E.filter_events_by_category(main_events, ("normandy",))
+    ).otherwise(E.filter_events_by_category(event_events, UPTAKE_CATEGORIES))
 
 
 def parse_failure() -> Column:

@@ -8,10 +8,15 @@ parsed, not as strings.
 
 from __future__ import annotations
 
+import copy
+import glob
 import json
+import os
+import random
 
 import pytest
 
+from perfbench.pings import AMPLITUDE_CONFIG
 from telemetry_streaming_spark.jobs import events_to_amplitude as amp
 from tests import fixtures
 
@@ -287,12 +292,14 @@ EXPECTED_MOBILE_USER_PROPS = {
 }
 
 
-def _run_app(spark, ping_json, doctype, app_name, config_filters):
-    cfg = dict(FOCUS_CONFIG)
-    cfg["filters"] = config_filters
+def _app_config(doctype, app_name):
+    return {**FOCUS_CONFIG, "filters": {"docType": [doctype], "appName": [app_name]}}
+
+
+def _run_app(spark, ping_json, doctype, app_name):
     df = amp.amplitude_payloads(
         fixtures.to_df(spark, [ping_json]),
-        amp.parse_config(cfg),
+        amp.parse_config(_app_config(doctype, app_name)),
         doctype=doctype,
         app_name=app_name,
     )
@@ -307,7 +314,6 @@ def test_rocket_events_user_properties(spark):
         fixtures.rocket_event_ping(),
         "focus-event",
         "Zerda",
-        {"docType": ["focus-event"], "appName": ["Zerda"]},
     )
     assert len(events) == 3
     for e in events:
@@ -323,7 +329,6 @@ def test_firetv_events_user_and_ping_properties(spark):
         fixtures.fire_tv_event_ping(),
         "mobile-event",
         "FirefoxForFireTV",
-        {"docType": ["mobile-event"], "appName": ["FirefoxForFireTV"]},
     )
     assert len(events) == 3
     for e in events:
@@ -340,7 +345,6 @@ def test_mobile_events_user_and_ping_properties(spark):
         fixtures.mobile_event_ping(),
         "mobile-event",
         "Fennec",
-        {"docType": ["mobile-event"], "appName": ["Fennec"]},
     )
     assert len(events) == 3
     for e in events:
@@ -361,9 +365,17 @@ def test_unknown_app_name_raises(spark):
         amp.context_for("mobile-event", None)
 
 
-# --- production config corpus (EventsToAmplitudeTest.scala:397-405) ------
+# --- config corpus (EventsToAmplitudeTest.scala:397-405) ----------------
 
 CONFIG_DIR = "/root/reference/configs"
+
+SHIPPED_CONFIGS = [
+    FOCUS_CONFIG,
+    MAIN_CONFIG,
+    _app_config("focus-event", "Zerda"),
+    _app_config("mobile-event", "FirefoxForFireTV"),
+    _app_config("mobile-event", "Fennec"),
+]
 
 PING_FOR_DOCTYPE = {
     "focus-event": {
@@ -380,18 +392,23 @@ PING_FOR_DOCTYPE = {
 }
 
 
+def _config_corpus() -> list[amp.AmplitudeConfig]:
+    """The configs this file ships, plus the reference's production
+    configs when that checkout is present."""
+    configs = [amp.parse_config(doc) for doc in SHIPPED_CONFIGS]
+    configs += [amp.load_config(p) for p in sorted(glob.glob(os.path.join(CONFIG_DIR, "*.json")))]
+    return configs
+
+
 @pytest.mark.full  # r11: >=5s; fast-tier siblings cover this surface
 def test_production_config_corpus_compiles_and_runs(spark):
-    """Every config shipped with the reference must parse, validate,
-    compile to Column predicates/projections, and execute end-to-end
-    on a representative ping (mirrors the reference's all-configs
-    validation test)."""
-    import os
-
-    files = sorted(f for f in os.listdir(CONFIG_DIR) if f.endswith(".json"))
-    assert len(files) == 7
-    for fname in files:
-        cfg = amp.load_config(os.path.join(CONFIG_DIR, fname))
+    """Every corpus config must parse, validate, compile to Column
+    predicates/projections, and execute end-to-end on a representative
+    ping of the class its filters dispatch to (mirrors the reference's
+    all-configs validation test)."""
+    configs = _config_corpus()
+    assert configs  # never passes over an empty corpus
+    for cfg in configs:
         doctype, app = amp.dispatch_for_config(cfg)
         make_ping = PING_FOR_DOCTYPE[doctype][app]
         df = amp.amplitude_payloads(
@@ -520,12 +537,11 @@ def test_divergent_pattern_classifies_identically_across_tiers(spark):
 
 
 def test_production_corpus_stays_on_compiled_tier():
-    import glob
-
-    for path in glob.glob("/root/reference/configs/*.json"):
-        cfg = amp.load_config(path)
+    configs = _config_corpus()
+    assert configs  # never passes over an empty corpus
+    for cfg in configs:
         for _, spec in cfg.flat_specs():
-            assert amp.schema_is_compiled(spec.schema), path
+            assert amp.schema_is_compiled(spec.schema), spec.name
 
 
 @pytest.mark.full  # r11: >=5s; fast-tier siblings cover this surface
@@ -563,3 +579,109 @@ def test_general_fallback_maxlength_golden(spark):
         _run_focus(spark, [fixtures.focus_event_ping()], config=config)
     ).collect()
     assert len(rows) == 4
+
+
+# --- one serializer for every spec (Ping.scala:329-352) ------------------
+
+
+def many_spec_config(n: int = 48, seed: int = 14) -> dict:
+    """perfbench's 3-spec config plus ``n - 3`` compiled specs that never
+    match, each with its own amplitudeProperties key."""
+    rng = random.Random(seed)
+    doc = copy.deepcopy(AMPLITUDE_CONFIG)
+    never = [
+        {
+            "name": f"Never{k}",
+            "amplitudeProperties": {f"prop_{k}": rng.choice(("value", "category", "extra.host"))},
+            "schema": {
+                "type": "object",
+                "properties": {"method": {"enum": [f"never_{rng.randrange(10**6)}"]}},
+                "required": ["method"],
+            },
+        }
+        for k in range(n - 3)
+    ]
+    doc["eventGroups"].append({"eventGroupName": "never", "events": never})
+    return doc
+
+
+SERIALIZER_PINGS = [
+    fixtures.focus_event_ping(),
+    fixtures.focus_event_ping(meta={"clientId": None}),
+    fixtures.focus_event_ping(
+        events=[
+            [1, "action", "foreground", "app"],
+            [2, "action", "click", "x", "erase_x"],
+            [3, "action", "click", None, "erase_y"],  # no object: Erase requires one
+        ]
+    ),
+]
+
+
+def _event_json(spark, doc, pings=SERIALIZER_PINGS):
+    cfg = amp.parse_config(doc)
+    return amp.exploded_events(amp.amplitude_payloads(fixtures.to_df(spark, pings), cfg))
+
+
+def test_many_spec_config_serializes_like_three_specs(spark):
+    three = sorted(r.event_json for r in _event_json(spark, AMPLITUDE_CONFIG).collect())
+    many = sorted(r.event_json for r in _event_json(spark, many_spec_config()).collect())
+    assert len(three) == 8  # 3 + 3 + 2 matched events
+    assert many == three
+
+
+def test_one_serializer_in_the_executed_plan(spark):
+    """Both spec counts plan one to_json, outside every Filter, and the
+    plan stays about flat as specs are added."""
+    plans = {}
+    for n, doc in ((3, AMPLITUDE_CONFIG), (48, many_spec_config())):
+        plans[n] = _event_json(spark, doc)._jdf.queryExecution().executedPlan().toString()
+        assert plans[n].count("StructsToJsonEvaluator") == 1, n
+        nodes = [ln.lstrip(" +-:*()0123456789") for ln in plans[n].splitlines()]
+        filters = [ln for ln in nodes if ln.startswith("Filter")]
+        assert filters and not any("StructsToJson" in ln for ln in filters), n
+    assert len(plans[48]) <= 1.5 * len(plans[3])
+
+
+def _shadowing(key: str) -> dict:
+    doc = copy.deepcopy(FOCUS_CONFIG)
+    doc["eventGroups"][0]["events"][1]["userProperties"] = {"host": "extra.host", key: "extra.host"}
+    return doc
+
+
+def test_user_property_shadows_context_key(spark):
+    """A spec's userProperties key that names a context key replaces the
+    value, in the context key's place, for that spec's events only; the
+    other specs keep the context value.  In the Focus context
+    pref_locale is a string and pref_secure a boolean: the shadowing
+    spec emits its string and the others keep the boolean."""
+    for key, ctx_value in (("pref_locale", ""), ("pref_secure", True)):
+        rows = _run_focus(spark, [fixtures.focus_event_ping()], config=_shadowing(key)).collect()
+        events = {e["event_type"]: e for e in map(json.loads, rows[0].events)}
+        erase = events["m_foc - Erase"]["user_properties"]
+        assert erase[key] == "side"
+        assert list(erase).index(key) == list(EXPECTED_FOCUS_USER_PROPS).index(key)
+        for other in ("m_foc - AppOpen", "second_event_group - AppClose"):
+            assert events[other]["user_properties"][key] == ctx_value, (key, other)
+
+
+def test_spec_dependent_parts_follow_the_matched_spec(spark):
+    """Each spec keeps its own property key order and session offset,
+    even where two specs list the same keys in different orders."""
+    doc = copy.deepcopy(FOCUS_CONFIG)
+    app_open, erase = doc["eventGroups"][0]["events"]
+    app_open["amplitudeProperties"] = {"b": "method", "a": "object"}
+    erase["amplitudeProperties"] = {"a": "value", "b": "extra.host"}
+    doc["eventGroups"][1]["events"][0]["sessionIdOffset"] = "extra.sessionLength"
+    rows = _run_focus(spark, [fixtures.focus_event_ping()], config=doc).collect()
+    events = {e["event_type"]: e for e in map(json.loads, rows[0].events)}
+    assert list(events["m_foc - AppOpen"]["event_properties"].items()) == [
+        ("b", "foreground"),
+        ("a", "app"),
+    ]
+    assert list(events["m_foc - Erase"]["event_properties"].items()) == [
+        ("a", "erase_home"),
+        ("b", "side"),
+    ]
+    assert events["m_foc - AppOpen"]["session_id"] == CREATED
+    assert events["second_event_group - AppClose"]["session_id"] == CREATED + 1000

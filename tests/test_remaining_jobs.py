@@ -116,6 +116,20 @@ def test_crashes_to_opentsdb_json(spark):
     assert "crashSignature" not in doc["tags"]
 
 
+def test_opentsdb_sanitizes_raw_signature(spark):
+    """P25: to_opentsdb encodes a caller's raw signature for the
+    OpenTSDB charset where it enters the tags
+    (CrashesToOpenTsdb.scala:36-42)."""
+    import pyspark.sql.functions as F
+
+    doc = json.loads(
+        crashes.to_opentsdb(
+            to_df(spark, [crash_ping()]), signature=F.lit("a | b::c d")
+        ).collect()[0].value
+    )
+    assert doc["tags"]["crashSignature"] == "a.b-c_d"
+
+
 def test_fennec_crash_os_fixup_in_tags(spark):
     line = crashes.to_influx(
         to_df(spark, [crash_ping(fennec=True)]), app_names=("Firefox", "Fennec")
@@ -132,7 +146,7 @@ def test_crash_signature_pandas_udf_plumbs_into_influx(spark):
         return f"sig-{len(stack_traces_json) % 97}"
 
     udf = crashes.crash_signature_udf(signature_fn=fake_sig)
-    sig_col = crashes.influx_escape_signature(udf(F.to_json(F.col("ping")["payload"])))
+    sig_col = udf(F.to_json(F.col("ping")["payload"]))
     line = crashes.to_influx(to_df(spark, [crash_ping()]), signature=sig_col).collect()[0].value
     assert ",crashSignature=sig-" in line
 
@@ -145,8 +159,6 @@ def test_crash_signature_default_siggen_end_to_end(spark):
     import pyspark.sql.functions as F
 
     udf = crashes.crash_signature_udf()
-    sig_col = crashes.influx_escape_signature(
-        udf(F.to_json(F.col("ping")["payload"]["stackTraces"]))
-    )
+    sig_col = udf(F.to_json(F.col("ping")["payload"]["stackTraces"]))
     line = crashes.to_influx(to_df(spark, [crash_ping()]), signature=sig_col).collect()[0].value
     assert ",crashSignature=memcpy\\ |\\ mozilla::dom::Element::SetAttr" in line
