@@ -260,7 +260,7 @@ def run_crashes(spark, args, protocol: str):
         lines = job.to_influx(raw, measurement_name=args.measurement)
         prefix, sep, suffix = "", "\n", ""
     else:
-        lines = job.to_opentsdb(raw)
+        lines = job.to_opentsdb(raw, measurement_name=args.measurement)
         prefix, sep, suffix = "[", ",", "]"
     sink = BatchHttpSink(
         args.url, prefix=prefix, sep=sep, suffix=suffix, max_batch_size=args.max_batch_size

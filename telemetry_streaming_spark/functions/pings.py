@@ -2,11 +2,13 @@
 expressions.
 
 The reference implements all of these inside opaque ``flatMap``
-closures (Catalyst sees a black box, no codegen, no pruning).  Here
-each is a column expression over the parsed ping struct, so the whole
+closures (Catalyst sees a black box, no codegen).  Here each is a
+column expression over the parsed ping struct, so the whole
 parse -> normalize -> filter -> project pipeline stays inside one
-WholeStageCodegen stage and unused payload branches are pruned at the
-scan.
+WholeStageCodegen stage.  Every job parses through
+:func:`guarded_parse`: its observation keeps the job's filters above
+the one ``from_json``, so each envelope is parsed once (the
+reference's ``Ping.messageToPing``, Ping.scala:59-74).
 
 Reference citations per function; "drop" semantics (throw-inside-
 flatMap, ErrorAggregatorBase.scala:229-236) become explicit boolean
@@ -28,32 +30,26 @@ from telemetry_streaming_spark.schemas import ping_schema
 SECONDS_PER_HOUR = 3600
 
 
-def parsed_pings_raw(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """The ``from_json`` projection WITHOUT the drop-filter: columns
-    ``(ping, __corrupt)`` where ``__corrupt`` carries the raw text of
-    an undecodable envelope (PERMISSIVE columnNameOfCorruptRecord) and
-    is null for well-formed rows.
+def parsed_pings_raw(raw: DataFrame) -> DataFrame:
+    """The one ``from_json`` projection, WITHOUT the drop filter:
+    columns ``(ping, __corrupt)`` where ``__corrupt`` carries the raw
+    text of an undecodable envelope (PERMISSIVE
+    columnNameOfCorruptRecord) and is null for well-formed rows.
+    ``ping`` still holds its ``__corrupt`` field.
 
-    This is where :func:`guarded_parse` attaches the ``parse_guard``
-    observation — a rejection counter must see undecodable rows before
-    they are dropped.  A null-struct check is NOT enough: Spark's
-    PERMISSIVE ``from_json`` yields a struct of all-null FIELDS for
-    malformed input, not a null struct, so only the corrupt-record
-    column distinguishes 'undecodable' from 'decoded but empty'."""
+    A null-struct check is NOT enough: Spark's PERMISSIVE ``from_json``
+    yields a struct of all-null FIELDS for malformed input, not a null
+    struct, so only the corrupt-record column distinguishes
+    'undecodable' from 'decoded but empty'."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType(ping_schema().fields + [StructField("__corrupt", StringType())])
-    parsed = raw.select(
-        F.from_json(
-            F.col(value_col).cast("string"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"},
-        ).alias("__p")
+    ping = F.from_json(
+        F.col("value").cast("string"),
+        schema,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "__corrupt"},
     )
-    return parsed.select(
-        F.col("__p").dropFields("__corrupt").alias("ping"),
-        F.col("__p")["__corrupt"].alias("__corrupt"),
-    )
+    return raw.select(ping.alias("ping")).withColumn("__corrupt", F.col("ping")["__corrupt"])
 
 
 def undecodable() -> Column:
@@ -61,21 +57,22 @@ def undecodable() -> Column:
     return F.col("__corrupt").isNotNull() | F.col("ping").isNull()
 
 
-def parse_pings(raw: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_pings(raw: DataFrame) -> DataFrame:
     """P1/P2: JSON envelope -> typed `ping` struct column.
 
     PERMISSIVE parity: malformed JSON is dropped (the reference drops
-    undecodable messages, ErrorAggregatorBase:229-236), detected via
-    the corrupt-record column (see :func:`parsed_pings_raw`).
-    """
-    return parsed_pings_raw(raw, value_col).where(~undecodable()).select("ping")
+    undecodable messages, ErrorAggregatorBase:229-236) and counted by
+    :func:`guarded_parse`."""
+    return guarded_parse(raw, undecodable())[0]
 
 
 def guarded_parse(raw: DataFrame, rejected: Column):
-    """:func:`parse_pings` with the ``parse_guard`` observation
-    (``rows_seen``, ``rows_rejected``) attached before the drop filter;
-    returns ``(pings, counts)``.  ``rejected`` is the job's flag over
-    :func:`parsed_pings_raw` rows.
+    """The ping parse with the ``parse_guard`` observation (``rows_seen``,
+    ``rows_rejected``) attached before the drop filter; returns
+    ``(pings, counts)``.  ``rejected`` is the job's flag over
+    :func:`parsed_pings_raw` rows.  Catalyst pushes no filter below an
+    observation, so a job's filters read the one parse instead of
+    copying ``from_json``, and only kept rows lose ``__corrupt``.
 
     The reference lets parse exceptions propagate
     (ErrorAggregatorBase.scala:220); the engine's parse never throws,
@@ -90,8 +87,9 @@ def guarded_parse(raw: DataFrame, rejected: Column):
     ``QueryProgressEvent.observedMetrics["parse_guard"]``."""
     parsed = parsed_pings_raw(raw)
     counters = reject_counters(rejected)
-    guarded, obs = observe_counts(parsed, "parse_guard", streaming=raw.isStreaming, **counters)
-    pings = guarded.where(~undecodable()).select("ping")
+    guarded, obs = observe_counts(parsed, "parse_guard", **counters)
+    kept = guarded.where(~undecodable())
+    pings = kept.select(F.col("ping").dropFields("__corrupt").alias("ping"))
     if obs is None:
         return pings, None
 

@@ -13,9 +13,10 @@ schemas).  Dataflow parity:
 
 Where the reference's opaque flatMap forces a serialize/deserialize
 boundary (no codegen, no pruning — ErrorAggregatorBase.scala:223-236),
-this plan is columnar end-to-end: Catalyst pushes the doctype/appName
-filters into the scan and the whole parse->project->explode stage
-fuses into one WholeStageCodegen span before the aggregation exchange.
+this plan is columnar end-to-end: the doctype/appName filters read
+the one parsed ping above the ``parse_guard`` observation, and the
+whole parse->filter->project->explode stage fuses into one
+WholeStageCodegen span before the aggregation exchange.
 
 At 100TB: the only shuffle is the groupBy exchange on (window, dims);
 map-side partial aggregation bounds it to O(windows x dim-cardinality)

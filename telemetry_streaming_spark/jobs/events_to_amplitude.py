@@ -18,16 +18,16 @@ Ping.scala:300-473) Spark-first:
   spec-dependent part by that index, so the plan does not grow with
   the number of specs.
 * Top-level filters (EventsToAmplitude.scala:150-166) are plain
-  ``filter`` on meta columns, so at 100 TB they push down to the scan
-  (partition pruning on docType/appName/submissionDate layouts).
+  ``filter`` on meta columns over the one parsed ping
+  (``functions/pings.parse_pings``); nothing is pushed into the scan.
 * Sampling (``includePing``, Ping.scala:384-393): keep iff
   ``coalesce(sample_id, lit(sample*100)) < sample*100``.
 
-Scale notes: output is ``repartition(clientId)`` so one HTTP request
-carries one client's events (Bug 1484819, EventsToAmplitude.scala:228);
-in batch mode ``repartition(maxParallel, clientId)`` bounds request
-parallelism and ``minDelay`` sleeps rate-limit to
-``10^3 * maxParallel / minDelay`` req/s (EventsToAmplitude.scala:29-36).
+Not reproduced (ROADMAP item 2, co-location): the reference's
+``repartition(maxParallel, clientId)`` so one HTTP request carries one
+client's events, and its ``minDelay`` rate limit (Bug 1484819,
+EventsToAmplitude.scala:29-36, :228); the CLI pushes the partitions as
+they are.
 """
 
 from __future__ import annotations
@@ -318,7 +318,9 @@ def _first_match_indices(events_col: Column, schemas: list[dict]) -> Column:
 
         return ev_json.map(per_ping)
 
-    match_udf = pandas_udf(_match, "array<int>", PandasUDFType.SCALAR)
+    # Nondeterministic to the optimizer only, so it neither pushes the
+    # UDF into the ping filter nor inlines it into the serializer.
+    match_udf = pandas_udf(_match, "array<int>", PandasUDFType.SCALAR).asNondeterministic()
     return match_udf(F.to_json(events_col))
 
 
@@ -712,7 +714,7 @@ def amplitude_event_json(
     event_types = F.array(*[F.lit(f"{g} - {spec.name}") for g, spec in specs])
     offsets = {i: s.session_id_offset for i, (_, s) in enumerate(specs) if s.session_id_offset}
     offset = (
-        F.coalesce(_by_spec(ev, j, offsets).cast("bigint"), F.lit(0)) if offsets else F.lit(0)
+        F.coalesce(_by_spec(ev, j, offsets).try_cast("bigint"), F.lit(0)) if offsets else F.lit(0)
     )
     insert_id = F.concat_ws(
         "-",
@@ -846,7 +848,7 @@ def amplitude_payloads(
         # Compiled tier: per-event matching runs INSIDE the events
         # array via transform() — no explode, no shuffle, whole ping
         # stays one row end-to-end.
-        idx = F.transform(
+        match = F.transform(
             events,
             lambda ev: F.coalesce(
                 *[F.when(event_predicate(ev, s.schema), i) for i, (_, s) in enumerate(specs)],
@@ -859,14 +861,14 @@ def amplitude_payloads(
         # array to its spec indices, one Arrow batch at a time.  Pure
         # map, no explode, no shuffle: the plan streams like the
         # reference's in-stream validator (Ping.scala:354-377).
-        idx = _first_match_indices(events, [spec.schema for _, spec in specs])
-    # Both tiers meet here: one serializer per event, picked by index.
-    # The ping filter reads the index, never the serialized array, so
-    # pushing it down copies no serializer.
+        match = _first_match_indices(events, [spec.schema for _, spec in specs])
+    # Both tiers meet here: the index is projected once, the ping filter
+    # reads it, and one serializer per event picks its spec by index.
+    idx = F.col("__idx")
     matched = F.zip_with(
         events, idx, lambda ev, j: F.when(j >= 0, amplitude_event_json(ping, ctx, ev, j, specs))
     )
-    return df.filter(F.exists(idx, lambda j: j >= 0)).select(
+    return df.withColumn("__idx", match).filter(F.exists(idx, lambda j: j >= 0)).select(
         F.coalesce(ctx.client_id, F.lit("")).alias("client_id"),
         F.array_compact(matched).alias("events"),
     )

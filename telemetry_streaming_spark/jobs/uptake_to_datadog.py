@@ -32,23 +32,17 @@ def _uptake_events(ping) -> Column:
     ).otherwise(E.filter_events_by_category(event_events, UPTAKE_CATEGORIES))
 
 
-def parse_failure() -> Column:
-    """The rows the ``parse_guard`` observation counts as rejected:
-    undecodable envelopes, the only throw-path this job has
-    (UptakeEventsToDatadog.scala:117-118).  docType and event-category
-    misses are intentional drops."""
-    return P.undecodable()
-
-
 def metrics(raw: DataFrame):
     """One row per DogStatsD metric: counters for every event, timer
     metrics when extra.duration / extra.age parse as ints.
 
     Returns ``(df, counts)``: the plan carries the ``parse_guard``
-    observation of :func:`parse_failure` rows, and ``counts()`` reads
-    it after a batch action (``counts`` is ``None`` for streaming
-    input — see ``functions/pings.guarded_parse``)."""
-    pings, counts = P.guarded_parse(raw, parse_failure())
+    observation of undecodable envelopes, the only throw-path this job
+    has (UptakeEventsToDatadog.scala:117-118; docType and
+    event-category misses are intentional drops), and ``counts()``
+    reads it after a batch action (``counts`` is ``None`` for
+    streaming input — see ``functions/pings.guarded_parse``)."""
+    pings, counts = P.guarded_parse(raw, P.undecodable())
     return _metrics_parsed(pings), counts
 
 

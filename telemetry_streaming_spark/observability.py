@@ -47,21 +47,22 @@ class SinkMetrics:
         return {n: int(a.value) for n, a in self._acc.items()}
 
 
-def observe_counts(df: DataFrame, name: str, streaming: bool = False, **metrics: Column):
+def observe_counts(df: DataFrame, name: str, **metrics: Column):
     """Attach named observed aggregates to a plan: returns
     ``(df, observation)``.  Metrics are computed as a side output of
     the existing pass — no second scan (the idiomatic replacement for
     the reference's per-record accumulator bumps inside flatMap).
 
-    Streaming plans cannot carry an ``Observation`` handle — pass
-    ``streaming=True`` to attach by name instead (observation comes
-    back ``None``; read per-batch values from
+    A batch plan gets an ``Observation`` with its own unique name, so
+    two observed frames can meet in one plan.  A streaming plan cannot
+    carry an ``Observation`` handle: it attaches as ``name`` and the
+    observation comes back ``None``; read per-batch values from
     ``QueryProgressEvent.observedMetrics[name]``, e.g. via
-    :class:`RejectGuardListener`)."""
+    :class:`RejectGuardListener`."""
     aliased = [m.alias(k) for k, m in metrics.items()]
-    if streaming:
+    if df.isStreaming:
         return df.observe(name, *aliased), None
-    obs = Observation(name)
+    obs = Observation()
     return df.observe(obs, *aliased), obs
 
 

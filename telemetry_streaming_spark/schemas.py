@@ -4,9 +4,10 @@ The reference assembles per-job schemas with a typed SchemaBuilder
 (timeseries/package.scala:16-50) and navigates dynamic JSON payloads
 with json4s.  Our engine is white-box instead: one superset
 ``StructType`` describes the ping envelope, ``from_json`` parses it
-once, and every accessor is a column expression — so Catalyst prunes
-unused payload branches (the parse of ``payload.processes`` is never
-executed for a job that doesn't touch events).
+once per row (``functions/pings.guarded_parse``), and every accessor
+is a column expression over the parsed struct.  The parse sits below
+the ``parse_guard`` observation, so Catalyst neither copies it into
+the jobs' filters nor prunes unused payload branches from it.
 
 Envelope covers the doctypes the reference handles: main, crash,
 core, event, focus-event/mobile-event, frecency-update

@@ -73,7 +73,6 @@ def get_spark(
         # mirror of the reference's partition-overwrite contract
         # (ErrorAggregatorBase.scala:205) for batch date re-runs
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.streaming.stopGracefullyOnShutdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

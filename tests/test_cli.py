@@ -76,6 +76,25 @@ def test_crashes_to_influx_offline_sink(spark, tmp_path):
     assert lines and all(r.value.startswith("crashes,") for r in lines)
 
 
+@pytest.mark.parametrize("job", ["crashes_to_influx", "crashes_to_opentsdb"])
+def test_crashes_measurement_names_the_metric(spark, tmp_path, job):
+    """--measurement names the influx measurement and the OpenTSDB
+    metric alike (SURVEY P25: both targets format the one measurement
+    name, CrashesToInflux.scala:13-22, CrashesToOpenTsdb.scala:13-30)."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "crashes.jsonl").write_text(crash_ping() + "\n")
+    out = tmp_path / "lines"
+    main([job, "--input-path", str(src), "--output-path", str(out),
+          "--measurement", "crash_counts"], spark=spark)
+    lines = [r.value for r in spark.read.text(str(out)).collect()]
+    assert lines
+    if job == "crashes_to_influx":
+        assert all(v.startswith("crash_counts,") for v in lines)
+    else:
+        assert all(json.loads(v)["metric"] == "crash_counts" for v in lines)
+
+
 def test_explain_mode_runs_nothing(spark, tmp_path, capsys):
     """--explain prints a physical plan and must not create output."""
     src = tmp_path / "in"

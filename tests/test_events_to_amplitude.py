@@ -640,7 +640,18 @@ def test_one_serializer_in_the_executed_plan(spark):
         nodes = [ln.lstrip(" +-:*()0123456789") for ln in plans[n].splitlines()]
         filters = [ln for ln in nodes if ln.startswith("Filter")]
         assert filters and not any("StructsToJson" in ln for ln in filters), n
-    assert len(plans[48]) <= 1.5 * len(plans[3])
+    # 45 more specs add their CASE branches and property slots, about
+    # 10k characters, and nothing that grows with the parse
+    assert len(plans[48]) - len(plans[3]) <= 15_000
+
+
+def test_general_tier_validates_each_ping_once(spark):
+    """The jsonschema UDF sits in one ArrowEvalPython node: the spec
+    index is projected once, below the ping filter that reads it."""
+    doc = copy.deepcopy(FOCUS_CONFIG)
+    doc["eventGroups"][0]["events"][0]["schema"] = MAXLEN_SCHEMA
+    plan = _event_json(spark, doc)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def _shadowing(key: str) -> dict:
@@ -685,3 +696,14 @@ def test_spec_dependent_parts_follow_the_matched_spec(spark):
     ]
     assert events["m_foc - AppOpen"]["session_id"] == CREATED
     assert events["second_event_group - AppClose"]["session_id"] == CREATED + 1000
+
+
+@pytest.mark.parametrize("ref", ["extra.nope", "category"])
+def test_unusable_session_offset_counts_as_zero(spark, ref):
+    """A sessionIdOffset that names a missing extra key or a
+    non-number gives offset 0; ANSI cast used to abort the job."""
+    doc = copy.deepcopy(FOCUS_CONFIG)
+    doc["eventGroups"][0]["events"][0]["sessionIdOffset"] = ref
+    rows = _run_focus(spark, [fixtures.focus_event_ping()], config=doc).collect()
+    events = {e["event_type"]: e for e in map(json.loads, rows[0].events)}
+    assert events["m_foc - AppOpen"]["session_id"] == CREATED
